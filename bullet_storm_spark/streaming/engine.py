@@ -25,11 +25,11 @@ filter+partial-agg over the batch); only bounded partial tables reach the
 driver — the same wire discipline as FilterBolt->JoinBolt sketch bytes.
 Scale note: with N concurrent queries the shared-scan multiplexer
 (streaming/multiquery.py) folds every aggregation family into one job per
-distinct key-set, RAW fleets into one mapInPandas pass per 64 members,
-and QUANTILE fleets into one KLL-partial pass per 16; the query-predicate
-partitioner (streaming/partitioner.py) prunes provably-non-matching
-queries before any job runs. Batch caching amortizes whatever remains
-per-query.
+distinct grouping column set, RAW fleets into one mapInPandas pass per 64
+members, and QUANTILE fleets into one KLL-partial pass per 16; the
+query-predicate partitioner (streaming/partitioner.py) prunes
+provably-non-matching queries before any job runs. Batch caching
+amortizes whatever remains per-query.
 """
 
 from __future__ import annotations
@@ -97,6 +97,7 @@ class StreamingEngine:
         self.queries_pruned = 0  # partitioner effectiveness counter
         self.shared_scan_queries = 0  # queries served by shared-scan jobs
         self.batches_processed = 0
+        self.batch_jobs = 0  # Spark jobs the last batch's partials ran
         self.results: list[tuple[str, Clip]] = []  # in-memory ResultBolt
         self.result_handlers: list[ResultHandler] = []
         self._query = None  # live StreamingQuery when attached
@@ -317,18 +318,13 @@ class StreamingEngine:
         self.metrics.increment(M.BATCHES_PROCESSED)
         active = self.registry.active()
         now_ms = int(self.clock() * 1000)
-        if len(active) < 2 and (
-            self._chunk_cache is not None or self._raw_chunk_cache is not None
-        ):
+        self.batch_jobs = 0
+        if len(active) < 2:
             # fleet shrank below any possible shareable threshold: drop
             # the cached ChunkPlans so retired queries' state can be
             # collected (the later shared-scan check also clears this,
             # but never runs when the batch short-circuits here)
-            self._chunk_cache_key = None
-            self._chunk_cache = None
-            self._raw_chunk_cache_key = None
-            self._raw_chunk_cache = None
-            self._bound_cache.clear()
+            self._drop_shared_plans()
         if not active:
             return
         if source is not None:
@@ -353,23 +349,35 @@ class StreamingEngine:
                 values = part.batch_values(batch_df)
                 scan = [rq for rq in active if part.should_scan(rq.id, values)]
                 self.queries_pruned += len(active) - len(scan)
-        # shared scan (multiquery.py): collapse shareable aggregation queries
-        # into ONE grouping-sets job; the rest run per-query
+        # shared scan (multiquery.py): collapse shareable queries into one
+        # job per distinct grouping column set; the rest run per-query
         shared: list = []
         if self.enable_shared_scan and len(scan) > 1:
             from bullet_storm_spark.streaming.multiquery import is_shareable
 
-            shared = [
-                rq
-                for rq in scan
-                if is_shareable(rq, rate_limited=self.rate_limit is not None)
-            ]
+            shared = [rq for rq in scan if is_shareable(rq)]
             if len(shared) < 2:
                 shared = []
             else:
                 scan = [rq for rq in scan if rq not in shared]
-        # shared queries plan into one job per distinct key-set (usually >1)
-        n_jobs = len(scan) + (2 if shared else 0)
+        chunks: list = []
+        if not shared:
+            # fleet shrank below the shareable threshold: drop the cached
+            # plans so the retired queries' RunningQuery objects (and their
+            # accumulated state) can be collected
+            self._drop_shared_plans()
+        else:
+            try:
+                chunks = self._shared_chunks(shared)
+            except Exception:
+                # planning failure (e.g. one member's plan is broken): run
+                # the fleet on the fault-isolated per-query path so only
+                # the offender FAILs
+                self._drop_shared_plans()
+                scan, shared = scan + shared, []
+        # the Spark jobs that will read the batch: one per per-query
+        # partial, one per shared chunk
+        self.batch_jobs = len(scan) + len(chunks)
         # persist the batch only if the caller hasn't already: a pre-
         # normalized, pre-persisted batch (bench.py, replayed batches)
         # passes straight through, while a fresh foreachBatch frame is
@@ -378,7 +386,11 @@ class StreamingEngine:
         # batch_df` guard never fired and every micro-batch's cache entry
         # leaked for the life of the stream
         we_persisted = False
-        if self.cache_batches and n_jobs > 1 and not getattr(batch_df, "is_cached", False):
+        if (
+            self.cache_batches
+            and self.batch_jobs > 1
+            and not getattr(batch_df, "is_cached", False)
+        ):
             batch_df.persist()
             we_persisted = True
         cached = batch_df
@@ -409,80 +421,26 @@ class StreamingEngine:
             else:
                 partials = {}
             partials = {k: v for k, v in partials.items() if v is not None}
-            if not shared and (
-                self._chunk_cache is not None
-                or self._raw_chunk_cache is not None
-            ):
-                # fleet shrank below the shareable threshold: drop the
-                # cached plans so the retired queries' RunningQuery
-                # objects (and their accumulated state) can be collected
-                self._chunk_cache_key = None
-                self._chunk_cache = None
-                self._raw_chunk_cache_key = None
-                self._raw_chunk_cache = None
-                self._bound_cache.clear()
             if shared:
                 from bullet_storm_spark.streaming.multiquery import (
-                    plan_chunks,
-                    plan_raw_chunks,
                     shared_partials,
-                    split_fleet,
                 )
 
                 try:
-                    # the one split definition (multiquery.split_fleet)
-                    # keys BOTH caches, so the cache layout can't drift
-                    # from the planner's own split
-                    raw_fleet, agg_fleet = split_fleet(shared)
-                    key = tuple((rq.id, id(rq)) for rq in agg_fleet)
-                    if key != self._chunk_cache_key:
-                        self._chunk_cache = plan_chunks(agg_fleet)
-                        self._chunk_cache_key = key
-                    raw_key = tuple((rq.id, id(rq)) for rq in raw_fleet)
-                    if raw_key != self._raw_chunk_cache_key:
-                        # RAW members fill and COMPLETE by design, often a
-                        # few per batch — rebuilding the plan (and its
-                        # bound frame) on every completion kept the bench
-                        # fleet in permanent plan churn (~0.8 s/batch,
-                        # r12). A fleet that only SHRANK keeps the cached
-                        # plan: completed members' rows are skipped at
-                        # collect time (room = 0) and ignored by the
-                        # active-query merge, so results are identical.
-                        # Rebuild on NEW members, or once live members
-                        # drop below half the plan (dead flag columns
-                        # still evaluate JVM-side — bounded waste).
-                        cached_ids = {
-                            (rq.id, id(rq))
-                            for cp in (self._raw_chunk_cache or [])
-                            for rq in cp.rqs
-                        }
-                        live = set(raw_key)
-                        if (
-                            self._raw_chunk_cache is None
-                            or not live <= cached_ids
-                            or len(live) * 2 < len(cached_ids)
-                        ):
-                            self._raw_chunk_cache = plan_raw_chunks(raw_fleet)
-                        self._raw_chunk_cache_key = raw_key
                     for qid, rows in shared_partials(
                         cached,
                         shared,
                         pool_width=self.job_pool_width,
-                        chunks=self._raw_chunk_cache + self._chunk_cache,
+                        chunks=chunks,
                         bound_cache=self._bound_cache,
                     ).items():
                         partials[qid] = rows
                     self.shared_scan_queries += len(shared)
                 except Exception:
-                    # planning/execution failure (e.g. one member's plan is
-                    # broken): fall back to the fault-isolated per-query
-                    # path so only the offender FAILs; drop the cached
-                    # plans so the next batch re-plans from scratch
-                    self._chunk_cache_key = None
-                    self._chunk_cache = None
-                    self._raw_chunk_cache_key = None
-                    self._raw_chunk_cache = None
-                    self._bound_cache.clear()
+                    # execution failure: fall back to the fault-isolated
+                    # per-query path so only the offender FAILs; drop the
+                    # cached plans so the next batch re-plans from scratch
+                    self._drop_shared_plans()
                     for rq in shared:
                         out = safe_partial(rq)
                         if out is not None:
@@ -548,6 +506,56 @@ class StreamingEngine:
             if we_persisted:
                 batch_df.unpersist()
 
+    def _drop_shared_plans(self) -> None:
+        self._chunk_cache_key = None
+        self._chunk_cache = None
+        self._raw_chunk_cache_key = None
+        self._raw_chunk_cache = None
+        self._bound_cache.clear()
+
+    def _shared_chunks(self, shared: list) -> list:
+        """The shared fleet's chunk plans (RAW passes first), from the plan
+        caches; a cache rebuilds only when its half of the fleet changed."""
+        from bullet_storm_spark.streaming.multiquery import (
+            plan_chunks,
+            plan_raw_chunks,
+            split_fleet,
+        )
+
+        # the one split definition (multiquery.split_fleet) keys BOTH
+        # caches, so the cache layout can't drift from the planner's own
+        # split
+        raw_fleet, agg_fleet = split_fleet(shared)
+        key = tuple((rq.id, id(rq)) for rq in agg_fleet)
+        if key != self._chunk_cache_key:
+            self._chunk_cache = plan_chunks(agg_fleet)
+            self._chunk_cache_key = key
+        raw_key = tuple((rq.id, id(rq)) for rq in raw_fleet)
+        if raw_key != self._raw_chunk_cache_key:
+            # RAW members fill and COMPLETE by design, often a few per
+            # batch — rebuilding the plan (and its bound frame) on every
+            # completion kept the bench fleet in permanent plan churn
+            # (~0.8 s/batch, r12). A fleet that only SHRANK keeps the
+            # cached plan: completed members' rows are skipped at collect
+            # time (room = 0) and ignored by the active-query merge, so
+            # results are identical. Rebuild on NEW members, or once live
+            # members drop below half the plan (dead flag columns still
+            # evaluate JVM-side — bounded waste).
+            cached_ids = {
+                (rq.id, id(rq))
+                for cp in (self._raw_chunk_cache or [])
+                for rq in cp.rqs
+            }
+            live = set(raw_key)
+            if (
+                self._raw_chunk_cache is None
+                or not live <= cached_ids
+                or len(live) * 2 < len(cached_ids)
+            ):
+                self._raw_chunk_cache = plan_raw_chunks(raw_fleet)
+            self._raw_chunk_cache_key = raw_key
+        return self._raw_chunk_cache + self._chunk_cache
+
     def stats(self) -> dict[str, Any]:
         """Engine statistics — the FilterBolt periodic stats report
         (M/FilterBolt.java:153-158,177-185) as a pull-based surface."""
@@ -558,6 +566,7 @@ class StreamingEngine:
             "duplicates_ignored": self.registry.duplicates_ignored,
             "queries_pruned": self.queries_pruned,
             "shared_scan_queries": self.shared_scan_queries,
+            "batch_jobs": self.batch_jobs,
             "records_consumed": sum(
                 rq.records_consumed for rq in self.registry.queries.values()
             ),

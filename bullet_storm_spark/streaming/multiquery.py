@@ -2,11 +2,11 @@
 
 The engine's baseline multiplexing runs one job per live query per batch.
 This planner batches every *shareable* query into one aggregation job per
-DISTINCT KEY-SET:
+DISTINCT GROUPING COLUMN SET:
 
-  pre-select: per job -> each member query's boolean filter column f_i and
-              the job's canonical key columns (queries grouping on the same
-              expression share one column and one job)
+  pre-select: per job -> each member query's boolean filter column f_i, its
+              value columns, and the job's canonical key columns (queries
+              grouping on the same expression share one column and one job)
   groupBy   : the key-set's columns (no GROUPING SETS — an Expand would
               duplicate every input row once per key-set, which benchmarks
               slower than per-set jobs over the cached batch)
@@ -15,15 +15,31 @@ DISTINCT KEY-SET:
               count; groups with zero matches for a query are artifacts of
               other members' rows and are dropped at split time
 
+The key-set rule: a member's key-set is the plain grouping columns of its
+query, whatever the family. GROUP BY and TOP K on the same field are one
+job — TOP K renders its key as a string (``coalesce(cast(k as string),
+'null')``) per output group inside ``agg()``, and ``TopKState.merge`` sums
+rows that render alike, so NULL and a literal ``'null'`` merge exactly as on
+the per-query path. GROUP ALL, COUNT DISTINCT and FREQ/CUMFREQ (PMF/CDF)
+are keyless: PMF/CDF members carry a pre-selected bin index and aggregate
+one conditional count per bin into an ``__bins`` array, as long as the
+spec has at most MAX_SHARED_BINS bins. A longer point list (a REGION spec
+can yield hundreds of points, and as many conditional sums in one aggregate
+would blow codegen limits) keeps a keyed job on its own bin expression.
+
+One caveat of the shared key: Spark normalizes -0.0 to 0.0 in grouping
+keys, so a TOP K over a floating-point field reports -0.0 rows under
+"0.0" on this path (the per-query path renders them apart).
+
 With Q queries over K distinct key-sets this is K jobs instead of Q — e.g.
 a fleet of GROUP ALL health queries is ONE keyless aggregate regardless of
 fleet size. This is the reference's QueryManager one-record-many-queries
 fan-out (SURVEY.md §4 row 1 / §7.3 known-hard #1) as Catalyst plans.
 
-Shareable: GROUP ALL / GROUP BY, TOP K, DISTRIBUTION PMF/CDF — anything
-whose partial is a (possibly keyless) hash aggregation; their per-member
-match count doubles as the record-consumption metric, so they stay
-shareable under rate limits. RAW fleets (the reference's most common
+Shareable: GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT, DISTRIBUTION
+PMF/CDF — anything whose partial is a (possibly keyless) hash aggregation;
+their per-member match count doubles as the record-consumption metric, so
+they stay shareable under rate limits. RAW fleets (the reference's most common
 query shape, ``T/JoinBoltTest.java:340-351`` makeRawQuery) share ONE
 mapInPandas pass per <=MAX_RAW_MEMBERS_PER_JOB members: every member's
 filter and projection evaluate JVM-side into a nullable struct column,
@@ -40,9 +56,8 @@ QUANTILE fleets likewise share one mapInPandas pass per
 filtered values into its own mergeable KLL summary (identical
 compression to the per-query partial, so the paths produce the same
 summaries for the same partitioning).
-Not shareable: record-window queries (emission timing is per-query)
-and COUNT DISTINCT under a rate limit (its sketch partial carries no
-per-member count) — those run on the per-query path.
+Not shareable: record-window queries (emission timing is per-query) —
+those run on the per-query path.
 """
 
 from __future__ import annotations
@@ -55,10 +70,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from bullet_storm_spark.operators.top_k import NULL_RENDERING
 from bullet_storm_spark.plans.query import (
     DistributionType,
-    GroupBy,
     GroupOpType,
     SlidingRecordWindow,
-    TopK,
 )
 from bullet_storm_spark.streaming.state import (
     CountDistinctState,
@@ -69,32 +82,25 @@ from bullet_storm_spark.streaming.state import (
 )
 
 
-def is_shareable(rq, rate_limited: bool) -> bool:
+def is_shareable(rq) -> bool:
     if isinstance(rq.query.window, SlidingRecordWindow):
         return False
-    state = rq.state
-    if isinstance(state, (GroupState, TopKState)):
-        return True
-    if isinstance(state, RawState):
-        # shipped rows ARE the consumed records for RAW, and the shared
-        # pass ships exactly the per-query path's rows (capped at the
-        # remaining capacity at split time) — accounting is identical
-        # under a rate limit too
-        return True
-    if isinstance(state, DistributionState):
-        # PMF/CDF fold into the binning agg jobs; QUANTILE members share
-        # one mapInPandas pass building each member's mergeable KLL
-        # summary (r10 — the value-sample partial stopped being a blocker
-        # once the partial became the associative KLLSummary)
-        return True
-    if isinstance(state, CountDistinctState):
-        # approx folds an HLL sketch column into the keyless job; exact
-        # folds a collect_set column (raw key values — identical contents
-        # to the per-query distinct partial, nulls excluded both ways).
-        # Rate-limited CD stays per-query: neither column carries the
-        # per-batch record count.
-        return not rate_limited
-    return False
+    # RAW: shipped rows ARE the consumed records, and the shared pass ships
+    # exactly the per-query path's rows (capped at the remaining capacity
+    # at split time). QUANTILE members share one mapInPandas pass building
+    # each member's mergeable KLL summary. Every other family carries a
+    # per-member match count, so accounting is identical under a rate
+    # limit too.
+    return isinstance(
+        rq.state,
+        (
+            GroupState,
+            TopKState,
+            RawState,
+            DistributionState,
+            CountDistinctState,
+        ),
+    )
 
 
 @dataclass
@@ -132,61 +138,76 @@ def plan_jobs(queries) -> list[_Job]:
     for i, rq in enumerate(queries):
         state = rq.state
         resolve = _resolver(rq)
-        prefix = f"q{i}__"
         key_cols: dict[str, Column] = {}
-        key_to_alias: dict[str, str] = {}
+        key_fields: list[tuple[str, str]] = []  # (key column, field alias)
 
-        if isinstance(state, CountDistinctState):
-            keyed = False  # keyless HLL sketch job
-        elif isinstance(state, GroupState):
-            agg: GroupBy = state.agg
-            for fname in agg.fields:
+        if isinstance(state, (GroupState, TopKState)):
+            for fname in state.agg.fields:
                 col, tag = resolve(fname)
                 name = _canon(f"plain:{tag}")
                 key_cols[name] = col
-                key_to_alias[name] = agg.alias_of(fname)
-            keyed = bool(agg.fields)
-        elif isinstance(state, TopKState):
-            agg_t: TopK = state.agg
-            for fname in agg_t.fields:
-                col, tag = resolve(fname)
-                name = _canon(f"str:{tag}")
-                key_cols[name] = F.coalesce(
-                    col.cast("string"), F.lit(NULL_RENDERING)
-                )
-                key_to_alias[name] = agg_t.alias_of(fname)
-            keyed = True
-        else:  # DistributionState PMF/CDF
+                key_fields.append((name, state.agg.alias_of(fname)))
+        elif (
+            isinstance(state, DistributionState)
+            and len(state.points) + 1 > MAX_SHARED_BINS
+        ):
             col, tag = resolve(state.agg.field)
-            v = col.cast("double")
-            bin_idx = F.lit(0)
-            for pt in state.points:
-                bin_idx = bin_idx + (v >= F.lit(pt)).cast("int")
             name = _canon(f"bin:{tag}:{','.join(map(repr, state.points))}")
-            key_cols[name] = bin_idx
-            key_to_alias[name] = "__bin"
-            keyed = True
+            key_cols[name] = _bin_index(col, state.points)
+            key_fields.append((name, "__bin"))
+        # else keyless: COUNT DISTINCT, short-spec PMF/CDF (GROUP ALL has
+        # no fields)
 
         job_key = tuple(sorted(key_cols))
         job = jobs.setdefault(job_key, _Job(key_names=sorted(key_cols)))
-        for name, col in key_cols.items():
-            job.key_cols[name] = col
-
-        member = _Member(rq=rq, prefix=prefix, keyed=keyed)
-        for name, alias in key_to_alias.items():
-            member.rename[name] = alias
-        _add_agg_cols(member, state, rq, resolve, job)
+        job.key_cols.update(key_cols)
+        member = _Member(rq=rq, prefix=f"q{i}__", keyed=bool(key_cols))
+        _add_agg_cols(member, state, rq, resolve, job, key_fields)
         job.members.append(member)
     return list(jobs.values())
 
 
-def _add_agg_cols(member: _Member, state, rq, resolve, job: _Job) -> None:
+def _bin_index(col: Column, points) -> Column:
+    """The PMF/CDF bin of a value: how many split points it reaches (NULL
+    for a NULL value) — the same expression as DistributionState.partial."""
+    v = col.cast("double")
+    bin_idx = F.lit(0)
+    for pt in points:
+        bin_idx = bin_idx + (v >= F.lit(pt)).cast("int")
+    return bin_idx
+
+
+def _add_agg_cols(
+    member: _Member, state, rq, resolve, job: _Job, key_fields
+) -> None:
     p = member.prefix
     q = rq.query
     fcol = q.filter.to_column() if q.filter is not None else F.lit(True)
     fname = f"{p}f"
     job.value_cols[fname] = fcol
     f_ref = F.col(fname)
+    # counts use count_if, not sum(when(...)): one Py4J call each (plan
+    # building is Py4J-bound), and a NULL condition counts as false
+
+    def add(col: Column, name: str, partial_name: str) -> None:
+        member.agg_cols.append(col.alias(f"{p}{name}"))
+        member.rename[f"{p}{name}"] = partial_name
+
+    if isinstance(state, TopKState):
+        # per-group string rendering of the shared plain key: the TOP K
+        # partial's key shape, computed once per output group
+        for j, (kname, alias) in enumerate(key_fields):
+            add(
+                F.coalesce(F.col(kname).cast("string"), F.lit(NULL_RENDERING)),
+                f"r{j}",
+                alias,
+            )
+        # the per-group count IS the match count the split checks
+        add(F.count_if(f_ref), "match", "__c")
+        return
+
+    for kname, alias in key_fields:
+        member.rename[kname] = alias
 
     if isinstance(state, CountDistinctState):
         if len(state.agg.fields) == 1:
@@ -202,86 +223,70 @@ def _add_agg_cols(member: _Member, state, rq, resolve, job: _Job) -> None:
             # raw key values, nulls excluded — exactly the per-query
             # distinct partial's contents, so the driver-side set union
             # is path-independent
-            member.agg_cols.append(
-                F.collect_set(F.col(vname)).alias(f"{p}ks")
-            )
-            member.rename[f"{p}ks"] = "__ks"
+            add(F.collect_set(F.col(vname)), "ks", "__ks")
         else:
-            member.agg_cols.append(
-                F.hll_sketch_agg(F.col(vname)).alias(f"{p}sk")
-            )
-            member.rename[f"{p}sk"] = "__sketch"
-        return
+            add(F.hll_sketch_agg(F.col(vname)), "sk", "__sketch")
 
-    if isinstance(state, GroupState):
+    elif isinstance(state, GroupState):
         for j, op in enumerate(state.agg.operations):
             t = op.op
             if t == GroupOpType.COUNT:
-                c = F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint")
-                member.agg_cols.append(c.alias(f"{p}c{j}"))
-                member.rename[f"{p}c{j}"] = f"__c{j}"
+                add(F.count_if(f_ref), f"c{j}", f"__c{j}")
                 continue
             vcol, _ = resolve(op.field)
             vname = f"{p}v{j}"
             if t == GroupOpType.COUNT_FIELD:
                 job.value_cols[vname] = vcol
-                c = F.sum(
-                    F.when(f_ref & F.col(vname).isNotNull(), 1).otherwise(0)
-                ).cast("bigint")
-                member.agg_cols.append(c.alias(f"{p}c{j}"))
-                member.rename[f"{p}c{j}"] = f"__c{j}"
+                has_v = f_ref & F.col(vname).isNotNull()
+                add(F.count_if(has_v), f"c{j}", f"__c{j}")
             elif t in (GroupOpType.SUM, GroupOpType.AVG):
                 job.value_cols[vname] = vcol.cast("double")
-                member.agg_cols.append(
-                    F.sum(F.when(f_ref, F.col(vname))).alias(f"{p}s{j}")
-                )
-                member.agg_cols.append(
-                    F.sum(F.when(f_ref & F.col(vname).isNotNull(), 1).otherwise(0))
-                    .cast("bigint")
-                    .alias(f"{p}n{j}")
-                )
-                member.rename[f"{p}s{j}"] = f"__s{j}"
-                member.rename[f"{p}n{j}"] = f"__n{j}"
+                has_v = f_ref & F.col(vname).isNotNull()
+                add(F.sum(F.when(f_ref, F.col(vname))), f"s{j}", f"__s{j}")
+                add(F.count_if(has_v), f"n{j}", f"__n{j}")
             elif t in (GroupOpType.MIN, GroupOpType.MAX):
                 job.value_cols[vname] = vcol
                 fn = F.min if t == GroupOpType.MIN else F.max
-                member.agg_cols.append(
-                    fn(F.when(f_ref, F.col(vname))).alias(f"{p}m{j}")
-                )
-                member.rename[f"{p}m{j}"] = f"__m{j}"
-        member.agg_cols.append(
-            F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint").alias(f"{p}match")
-        )
-        # the match count doubles as the consumed-records metric
-        member.rename[f"{p}match"] = "__nrec"
-
-    elif isinstance(state, TopKState):
-        c = F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint")
-        member.agg_cols.append(c.alias(f"{p}c"))
-        member.rename[f"{p}c"] = "__c"
-        member.agg_cols.append(
-            F.sum(F.when(f_ref, 1).otherwise(0)).alias(f"{p}match")
-        )
+                add(fn(F.when(f_ref, F.col(vname))), f"m{j}", f"__m{j}")
 
     else:  # DistributionState PMF/CDF: null values never count in bins,
         # but they DO count as consumed records (match uses the raw filter)
         vcol, _ = resolve(state.agg.field)
-        effname = f"{p}fv"
-        job.value_cols[effname] = f_ref & vcol.cast("double").isNotNull()
-        eff = F.col(effname)
-        c = F.sum(F.when(eff, 1).otherwise(0)).cast("bigint")
-        member.agg_cols.append(c.alias(f"{p}c"))
-        member.rename[f"{p}c"] = "__c"
-        member.agg_cols.append(
-            F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint").alias(f"{p}match")
-        )
-        member.rename[f"{p}match"] = "__nrec"
+        if member.keyed:
+            effname = f"{p}fv"
+            job.value_cols[effname] = f_ref & vcol.cast("double").isNotNull()
+            add(F.count_if(F.col(effname)), "c", "__c")
+        else:
+            bname = f"{p}b"
+            job.value_cols[bname] = F.when(
+                f_ref & vcol.cast("double").isNotNull(),
+                _bin_index(vcol, state.points),
+            )
+            add(
+                F.array(
+                    *[
+                        F.count_if(F.col(bname) == b)
+                        for b in range(len(state.points) + 1)
+                    ]
+                ),
+                "bins",
+                "__bins",
+            )
+
+    # the match count doubles as the consumed-records metric
+    add(F.count_if(f_ref), "match", "__nrec")
 
 
 # max queries folded into one aggregation plan: beyond this, analysis +
 # codegen cost of the giant expression list dominates (measured: 93 GROUP
 # ALLs in one plan ran slower than 93 small jobs)
 MAX_MEMBERS_PER_JOB = 16
+
+# most PMF/CDF bins (split points + 1) a member folds into the keyless job,
+# one conditional count each; a longer spec keeps a keyed job on its bin
+# index, since hundreds of conditional sums in one aggregate would blow
+# the codegen limits
+MAX_SHARED_BINS = 16
 
 # RAW members per shared pass: the pre-select is one struct + no agg
 # expressions per member (far cheaper to analyze than an agg chunk), so

@@ -472,6 +472,13 @@ class DistributionState(QueryState):
                     KLLSummary.from_levels(r["__levels"], self.SAMPLE_CAP)
                 )
             return
+        if rows and "__bins" in rows[0]:
+            # shared-scan rows: one count per bin
+            for r in rows:
+                for b, c in enumerate(r["__bins"]):
+                    self.bin_counts[b] += c
+                    self.total += c
+            return
         for r in rows:
             if r["__bin"] is None:  # null-value bin: counted only by consumed()
                 continue

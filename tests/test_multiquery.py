@@ -1,5 +1,5 @@
-"""Shared-scan multi-query evaluation: one grouping-sets job must produce
-exactly the same per-query state as the per-query path."""
+"""Shared-scan multi-query evaluation: one job per distinct grouping column
+set must produce exactly the same per-query state as the per-query path."""
 
 import pytest
 
@@ -55,6 +55,26 @@ def _mixed_queries():
             aggregation=TopK(size=3, name="cnt", fields={"k": "", "s": "str"}),
             duration_ms=600_000,
         ),
+        # TOP K on s shares the GROUP BY s job; s holds real NULLs AND the
+        # literal string "null", which both render as "null"
+        "grp_s": Query(
+            aggregation=GroupBy(
+                fields={"s": ""},
+                operations=[GroupOperation(GroupOpType.COUNT, None, "cnt")],
+            ),
+            duration_ms=600_000,
+        ),
+        "topk_s": Query(
+            aggregation=TopK(size=2, name="cnt", fields={"s": ""}),
+            duration_ms=600_000,
+        ),
+        "topk_s_sketch": Query(
+            filter=gt("n", 5),
+            aggregation=TopK(
+                size=2, name="cnt", fields={"s": ""}, sketch_capacity=8
+            ),
+            duration_ms=600_000,
+        ),
         "pmf": Query(
             aggregation=Distribution(
                 field="v", dist_type=DistributionType.PMF, points=[10.0, 50.0]
@@ -64,6 +84,16 @@ def _mixed_queries():
         "cdf": Query(
             aggregation=Distribution(
                 field="v", dist_type=DistributionType.CDF, points=[10.0, 50.0]
+            ),
+            duration_ms=600_000,
+        ),
+        # longer than MAX_SHARED_BINS: keeps its own keyed bin job
+        "pmf_region": Query(
+            filter=gt("n", 3),
+            aggregation=Distribution(
+                field="v",
+                dist_type=DistributionType.PMF,
+                points=[2.0 * i for i in range(40)],
             ),
             duration_ms=600_000,
         ),
@@ -95,8 +125,18 @@ def _mixed_queries():
 
 @pytest.fixture()
 def batches(spark):
-    rows1 = [(f"{'ab'[i % 2]}", ["x", "y", None][i % 3], float(i), i) for i in range(80)]
-    rows2 = [("c", "x", float(i) + 0.5, i) for i in range(40)]
+    # v is NULL on every 9th row of batch 0 (PMF/CDF bin nothing but still
+    # consume the record); batch 1 mixes the literal "null" into s
+    rows1 = [
+        (
+            f"{'ab'[i % 2]}",
+            ["x", "y", None][i % 3],
+            None if i % 9 == 4 else float(i),
+            i,
+        )
+        for i in range(80)
+    ]
+    rows2 = [("c", ["x", "null"][i % 2], float(i) + 0.5, i) for i in range(40)]
     schema = "k string, s string, v double, n int"
     return (
         spark.createDataFrame(rows1, schema),
@@ -110,16 +150,22 @@ def _run(spark, batches, shared: bool):
         engine.submit(qid, q)
     for b in batches:
         engine.process_batch(b)
-    return {
-        qid: sorted(map(str, rq.state.result()))
-        for qid, rq in engine.registry.queries.items()
-    }, engine
+    outcomes = {
+        qid: _outcome(rq) for qid, rq in engine.registry.queries.items()
+    }
+    return outcomes, engine
+
+
+def _outcome(rq):
+    return sorted(map(str, rq.state.result())), rq.records_consumed
 
 
 def test_shared_scan_equals_per_query(spark, batches):
     base, _ = _run(spark, batches, shared=False)
     shared, engine = _run(spark, batches, shared=True)
-    assert engine.shared_scan_queries >= 20  # all 10 queries shareable x 2 batches
+    n = len(_mixed_queries())
+    # every query is shareable, on both batches
+    assert engine.shared_scan_queries == 2 * n
     assert base.keys() == shared.keys()
     for qid in base:
         assert base[qid] == shared[qid], qid
@@ -153,7 +199,7 @@ def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
     for qid, rq in engine.registry.queries.items():
         if qid == "grp_all":
             continue
-        assert sorted(map(str, rq.state.result())) == base[qid], qid
+        assert _outcome(rq) == base[qid], qid
 
 
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
@@ -325,10 +371,18 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
 
     rng = _random.Random(4100 + seed)
     rows1 = [
-        (f"{'abc'[i % 3]}", ["x", "y", None][i % 3], float(i % 97), i)
+        (
+            f"{'abc'[i % 3]}",
+            ["x", "y", None, "null"][i % 4],
+            None if i % 13 == 5 else float(i % 97),
+            i,
+        )
         for i in range(120)
     ]
-    rows2 = [("d", "x", float(i % 53) + 0.5, i + 120) for i in range(60)]
+    rows2 = [
+        ("d", ["x", "null"][i % 2], float(i % 53) + 0.5, i + 120)
+        for i in range(60)
+    ]
     schema = "k string, s string, v double, n int"
     batches = (
         spark.createDataFrame(rows1, schema).repartition(5),
@@ -364,7 +418,12 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
                 ],
             )
         elif fam == 2:
-            agg = TopK(size=rng.randint(1, 4), name="cnt", fields={"s": ""})
+            agg = TopK(
+                size=rng.randint(1, 4),
+                name="cnt",
+                fields={rng.choice("ks"): ""},
+                sketch_capacity=rng.choice([None, 8]),
+            )
         elif fam == 3:
             agg = Distribution(
                 field="v",
@@ -403,12 +462,17 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
             qid: rq.state.result()
             for qid, rq in engine.registry.queries.items()
         }
-        return live, done
+        consumed = {
+            qid: rq.records_consumed
+            for qid, rq in engine.registry.queries.items()
+        }
+        return live, done, consumed
 
-    base_live, base_done = run(False)
-    got_live, got_done = run(True)
+    base_live, base_done, base_consumed = run(False)
+    got_live, got_done, got_consumed = run(True)
     assert base_live.keys() == got_live.keys()
     assert base_done.keys() == got_done.keys()
+    assert base_consumed == got_consumed
     for qid in fleet:
         q = fleet[qid]
         b = base_live.get(qid, base_done[qid].records if qid in base_done else None)
@@ -482,3 +546,95 @@ def test_split_fleet_is_the_single_cache_key(spark):
     fleet = [raw_qs[0], mixed[0], raw_qs[1], mixed[1], raw_qs[2]]
     raw, rest = split_fleet(fleet)
     assert raw == raw_qs and rest == mixed
+
+
+class _PlanRQ:  # minimal RunningQuery stand-in: .query + .state + .id
+    def __init__(self, q):
+        from bullet_storm_spark.streaming.state import make_state
+
+        self.query = q
+        self.state = make_state(q)
+        self.id = id(self)
+
+
+def _one_chunk_per_key_set_fleet():
+    def freq(kind, points):
+        return Query(
+            aggregation=Distribution(field="v", dist_type=kind, points=points),
+            duration_ms=600_000,
+        )
+
+    q = _mixed_queries()
+    return {
+        "grp_all": q["grp_all"],
+        "cd": q["cd"],
+        "cd_approx": q["cd_approx"],
+        "pmf": freq(DistributionType.PMF, [10.0, 50.0]),
+        "cdf": freq(DistributionType.CDF, [5.0, 20.0, 60.0]),
+        "grp_by": q["grp_by"],
+        "topk": Query(
+            filter=gt("v", 3.0),
+            aggregation=TopK(size=2, name="cnt", fields={"k": "key"}),
+            duration_ms=600_000,
+        ),
+    }
+
+
+def test_plan_one_job_per_grouping_column_set():
+    # GROUP ALL, COUNT DISTINCT and FREQ/CUMFREQ with different point lists
+    # share the keyless job; GROUP BY k and TOP K on k share the k job
+    from bullet_storm_spark.streaming.multiquery import ChunkPlan, plan_chunks
+
+    fleet = [_PlanRQ(q) for q in _one_chunk_per_key_set_fleet().values()]
+    chunks = plan_chunks(fleet)
+    assert len(chunks) == 2 and all(isinstance(c, ChunkPlan) for c in chunks)
+    assert sorted(len(c.members) for c in chunks) == [2, 5]
+
+
+def test_plan_long_bin_spec_keeps_keyed_job():
+    # a 40-point REGION FREQ (41 bins > MAX_SHARED_BINS) stays on its own
+    # keyed bin job instead of 41 conditional sums in the keyless job
+    from bullet_storm_spark import bql
+    from bullet_storm_spark.streaming.multiquery import (
+        MAX_SHARED_BINS,
+        plan_chunks,
+    )
+
+    region = bql.parse(
+        "SELECT FREQ(v, REGION, 0, 390, 10) FROM STREAM(600000, TIME)"
+    )
+    assert len(region.aggregation.points) + 1 > MAX_SHARED_BINS
+    fleet = [_PlanRQ(q) for q in _one_chunk_per_key_set_fleet().values()]
+    chunks = plan_chunks(fleet + [_PlanRQ(region)])
+    assert len(chunks) == 3
+    (alone,) = [c for c in chunks if len(c.members) == 1]
+    (key,) = alone.key_names
+    assert key.startswith("k_bin_")
+
+
+def test_batch_jobs_and_single_reader_skips_persist(
+    spark, batches, monkeypatch
+):
+    # the job count decides persistence: a fleet that plans to one chunk
+    # reads the batch once, so persisting it would only add a cache build
+    frame_cls = type(batches[0])  # the concrete (classic) DataFrame class
+    calls = []
+    real_persist = frame_cls.persist
+    monkeypatch.setattr(
+        frame_cls,
+        "persist",
+        lambda self, *a, **k: calls.append(1) or real_persist(self, *a, **k),
+    )
+    q = _mixed_queries()
+    engine = StreamingEngine(spark, enable_shared_scan=True)
+    engine.submit("grp_all", q["grp_all"])
+    engine.submit("pmf", q["pmf"])
+    engine.submit("cd", q["cd"])
+    engine.process_batch(batches[0])
+    assert engine.stats()["batch_jobs"] == 1
+    assert calls == []
+    # one more key set -> two jobs read the batch -> persisted
+    engine.submit("grp_by", q["grp_by"])
+    engine.process_batch(batches[1])
+    assert engine.stats()["batch_jobs"] == 2
+    assert len(calls) == 1
