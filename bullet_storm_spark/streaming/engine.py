@@ -292,7 +292,10 @@ class StreamingEngine:
             df = df.select(
                 *[f.expression.to_column().alias(f.name) for f in q.projection.fields]
             )
-        return [r.asDict() for r in rq.state.partial(df).collect()]
+        partial = rq.state.partial(df)
+        if rq.state.columnar:
+            return partial.toArrow()
+        return [r.asDict() for r in partial.collect()]
 
     def process_batch(
         self, batch_df: DataFrame, batch_id: int = 0, source: str | None = None

@@ -65,6 +65,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 from bullet_storm_spark.operators.top_k import NULL_RENDERING
@@ -79,6 +80,7 @@ from bullet_storm_spark.streaming.state import (
     GroupState,
     RawState,
     TopKState,
+    arrow_rows,
 )
 
 
@@ -725,13 +727,16 @@ def plan_chunks(queries) -> list:
 def shared_partials(
     batch_df: DataFrame, queries, pool_width: int = 8, chunks=None,
     bound_cache: dict | None = None,
-) -> dict[str, list[dict[str, Any]]]:
-    """Compute every query's partial rows in one job per distinct key-set
+) -> dict[str, Any]:
+    """Compute every query's partial in one job per distinct key-set
     (chunked to MAX_MEMBERS_PER_JOB queries per plan). Chunk jobs execute
     concurrently — on low-partition batches a single job can't use the
     cluster, so concurrency across jobs supplies the parallelism, exactly
     like the per-query path. Pass ``chunks`` (from ``plan_chunks``, cached
-    across batches for a stable fleet) to skip plan construction.
+    across batches for a stable fleet) to skip plan construction. An
+    aggregation job is collected as one Arrow table and split per member
+    by column selection (``split_members``); RAW and QUANTILE passes are
+    collected as Rows.
 
     ``bound_cache`` (engine-owned dict) additionally caches the BOUND
     DataFrames — chunk Column trees attached to a concrete batch frame —
@@ -746,7 +751,7 @@ def shared_partials(
     bindings (plus a strong ref to the keyed frame so id() stays valid)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    result: dict[str, list[dict[str, Any]]] = {rq.id: [] for rq in queries}
+    result: dict[str, Any] = {rq.id: [] for rq in queries}
     if chunks is None:
         chunks = plan_chunks(queries)
     # PER-CHUNK bound entries keyed on the chunk object: RAW members fill
@@ -796,7 +801,7 @@ def shared_partials(
             return _collect_raw_chunk(out, members), members
         if tag == "quant":
             return _collect_quantile_chunk(out, members), members
-        return [r.asDict() for r in out.collect()], members
+        return out.toArrow(), members
 
     if len(bound) > 1:
         with ThreadPoolExecutor(max_workers=min(len(bound), pool_width)) as pool:
@@ -807,12 +812,20 @@ def shared_partials(
         if isinstance(members, (RawChunkPlan, QuantileChunkPlan)):
             for rq, member_rows in zip(members.rqs, rows):
                 result[rq.id] = member_rows
-            continue
-        for row in rows:
-            for m in members:
-                if m.keyed and not row.get(f"{m.prefix}match"):
-                    continue
-                result[m.rq.id].append(
-                    {out_name: row[in_name] for in_name, out_name in m.rename.items()}
-                )
+        else:
+            result.update(split_members(rows, members))
     return result
+
+
+def split_members(table, members: list[_Member]) -> dict[str, Any]:
+    """Each member's partial out of one aggregation job's Arrow table: its
+    columns under their partial names, and for a keyed member only the
+    groups its own rows reached (the others are artifacts of other
+    members' rows). Columnar states take the table, the rest row dicts."""
+    out = {}
+    for m in members:
+        sub = table.select(list(m.rename)).rename_columns(list(m.rename.values()))
+        if m.keyed:
+            sub = sub.filter(pc.greater(table[f"{m.prefix}match"], 0))
+        out[m.rq.id] = sub if m.rq.state.columnar else arrow_rows(sub)
+    return out

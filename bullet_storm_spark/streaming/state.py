@@ -10,13 +10,17 @@ Spark translation: the *partial* phase is a compiled DataFrame aggregation
 over each micro-batch (Catalyst's own partial+final machinery runs inside
 the batch, fully distributed); what crosses to the driver is one bounded
 partial-result table per query per batch — the same wire contract as the
-reference's sketch bytes. The *merge* phase is the small pure-Python
-fold below, bounded by each aggregation's size cap exactly like Bullet's
-sketches bound their state.
+reference's sketch bytes. The *merge* phase runs on the driver, bounded
+by each aggregation's size cap exactly like Bullet's sketches bound their
+state. GROUP ALL / GROUP BY partials arrive as one Arrow table and fold in
+with one pyarrow hash aggregation per batch (``columnar`` states); the
+other families' partials are few rows, folded in Python.
 
 Each QueryState implements:
   partial(df)  -> DataFrame   (batch -> bounded partial table, runs in Spark)
-  merge(rows)  -> None        (fold partial rows into state, driver-side)
+  merge(rows)  -> None        (fold the partial into state, driver-side;
+                               a pyarrow.Table for columnar states, else
+                               a list of row dicts)
   result()     -> list[dict]  (current emission, reference output shape)
   reset()      -> None        (window close — Querier.reset analogue)
   is_full()    -> bool        (RAW early-termination contract)
@@ -26,7 +30,12 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from bullet_storm_spark.operators import top_k as top_k_op
 from bullet_storm_spark.operators.distribution import cdf_labels, pmf_labels
@@ -42,7 +51,39 @@ from bullet_storm_spark.plans.query import (
 )
 
 
+def arrow_rows(table: pa.Table) -> list[dict[str, Any]]:
+    """The rows as ``Row.asDict()`` gives them."""
+    names = table.column_names
+    return [dict(zip(names, r)) for r in zip(*map(_pylist, table.columns))]
+
+
+def _pylist(col: pa.ChunkedArray) -> list:
+    # numbers, booleans and strings go through numpy: to_pylist() builds
+    # one Arrow scalar per value, several times slower than a Row collect
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return col.to_numpy().tolist()
+    if pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t):
+        values = pc.fill_null(col, pa.scalar(0).cast(t)).to_numpy().tolist()
+        for i in np.flatnonzero(col.is_null().to_numpy()):
+            values[i] = None
+        return values
+    # pyspark's own conversion turns toArrow()'s tz-aware UTC datetimes and
+    # bytes into the naive local datetimes and bytearray a Row holds
+    rows = ArrowTableToRowsConversion.convert(
+        pa.table([col], ["v"]),
+        from_arrow_schema(pa.schema([("v", t)])),
+        return_as_tuples=True,
+        binary_as_bytes=False,
+    )
+    return [r[0] for r in rows]
+
+
 class QueryState:
+    # merge() and consumed() take the partial as one pyarrow.Table
+    # (collected with toArrow()) instead of a list of Row dicts
+    columnar = False
+
     def partial(self, df: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
 
@@ -99,7 +140,11 @@ class RawState(QueryState):
 class GroupState(QueryState):
     """GROUP ALL / GROUP BY: metrics are merged as (count, sum, min, max)
     partials; AVG derives at result time — numeric-add merge semantics
-    exactly like GroupData (JoinBoltTest.java:663-693)."""
+    exactly like GroupData (JoinBoltTest.java:663-693). The groups are one
+    Arrow table in first-seen order, and each partial folds in with one
+    hash aggregation."""
+
+    columnar = True
 
     _SUPPORTED = {
         GroupOpType.COUNT,
@@ -109,6 +154,7 @@ class GroupState(QueryState):
         GroupOpType.MAX,
         GroupOpType.AVG,
     }
+    _COUNTS = (GroupOpType.COUNT, GroupOpType.COUNT_FIELD)
 
     def __init__(self, agg: GroupBy):
         for op in agg.operations:
@@ -119,7 +165,7 @@ class GroupState(QueryState):
                 )
         self.agg = agg
         self.key_aliases = [agg.alias_of(f) for f in agg.fields]
-        self.groups: dict[tuple, dict[str, Any]] = {}
+        self.groups: pa.Table | None = None
 
     def partial(self, df: DataFrame) -> DataFrame:
         keys = [F.col(f).alias(self.agg.alias_of(f)) for f in self.agg.fields]
@@ -142,67 +188,69 @@ class GroupState(QueryState):
         aggs.append(F.count(F.lit(1)).alias("__nrec"))
         return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
-    def merge(self, rows: list[dict[str, Any]]) -> None:
-        for row in rows:
-            key = tuple(row[a] for a in self.key_aliases)
-            g = self.groups.get(key)
-            if g is None:
-                if len(self.groups) >= self.agg.size and key not in self.groups:
-                    continue  # group cap (reference caps sketch entries)
-                g = self.groups[key] = {}
-            for i, op in enumerate(self.agg.operations):
-                t = op.op
-                if t in (GroupOpType.COUNT, GroupOpType.COUNT_FIELD):
-                    g[f"c{i}"] = g.get(f"c{i}", 0) + (row[f"__c{i}"] or 0)
-                elif t in (GroupOpType.SUM, GroupOpType.AVG):
-                    s, n = row[f"__s{i}"], row[f"__n{i}"] or 0
-                    if s is not None:
-                        g[f"s{i}"] = g.get(f"s{i}", 0.0) + s
-                    g[f"n{i}"] = g.get(f"n{i}", 0) + n
-                elif t == GroupOpType.MIN:
-                    m = row[f"__m{i}"]
-                    if m is not None:
-                        cur = g.get(f"m{i}")
-                        g[f"m{i}"] = m if cur is None else min(cur, m)
-                elif t == GroupOpType.MAX:
-                    m = row[f"__m{i}"]
-                    if m is not None:
-                        cur = g.get(f"m{i}")
-                        g[f"m{i}"] = m if cur is None else max(cur, m)
+    def merge(self, partial: pa.Table) -> None:
+        aggs = []
+        for i, op in enumerate(self.agg.operations):
+            t = op.op
+            if t in self._COUNTS:
+                aggs.append((f"__c{i}", "sum"))
+            elif t in (GroupOpType.SUM, GroupOpType.AVG):
+                aggs += [(f"__s{i}", "sum"), (f"__n{i}", "sum")]
+            else:
+                aggs.append((f"__m{i}", "min" if t == GroupOpType.MIN else "max"))
+        cols = {c: partial[c] for c in self.key_aliases + [c for c, _ in aggs]}
+        for c, fn in list(aggs):
+            if fn in ("min", "max") and pa.types.is_floating(cols[c].type):
+                # Arrow's min/max skip NaN where SQL orders it above every
+                # number: merge NaN-free, with an any-NaN flag beside
+                nan = pc.is_nan(cols[c])
+                cols[c] = pc.if_else(nan, None, cols[c])
+                cols[f"{c}_nan"] = pc.fill_null(nan, False)
+                aggs.append((f"{c}_nan", "any"))
+        table = pa.table(cols)
+        if self.groups is not None:
+            table = pa.concat_tables([self.groups, table], promote_options="default")
+        # with use_threads=False groups come out in first-seen order: the
+        # slice keeps every existing group and admits new keys in partial
+        # row order until the cap (reference caps sketch entries)
+        out = table.group_by(self.key_aliases, use_threads=False).aggregate(aggs)
+        names = {f"{name}_{fn}": name for name, fn in aggs}
+        out = out.rename_columns([names.get(c, c) for c in out.column_names])
+        self.groups = out.slice(0, self.agg.size)
 
     def result(self) -> list[dict[str, Any]]:
-        if not self.agg.fields and not self.groups:
+        g = self.groups
+        if g is None or not g.num_rows:
             # GROUP ALL emits one row even with no data (operator tests)
-            self.groups[()] = {}
-        out = []
-        for key, g in self.groups.items():
-            row = dict(zip(self.key_aliases, key))
-            for i, op in enumerate(self.agg.operations):
-                t = op.op
-                if t in (GroupOpType.COUNT, GroupOpType.COUNT_FIELD):
-                    row[op.alias] = g.get(f"c{i}", 0)
-                elif t == GroupOpType.SUM:
-                    row[op.alias] = g.get(f"s{i}")
-                elif t == GroupOpType.AVG:
-                    n = g.get(f"n{i}", 0)
-                    row[op.alias] = (g.get(f"s{i}", 0.0) / n) if n else None
-                else:
-                    row[op.alias] = g.get(f"m{i}")
-            out.append(row)
-        return out
+            ops = self.agg.operations
+            row = {op.alias: 0 if op.op in self._COUNTS else None for op in ops}
+            return [] if self.agg.fields else [row]
+        cols = {a: g[a] for a in self.key_aliases}
+        for i, op in enumerate(self.agg.operations):
+            t = op.op
+            if t in self._COUNTS:
+                cols[op.alias] = g[f"__c{i}"]
+            elif t == GroupOpType.SUM:
+                cols[op.alias] = g[f"__s{i}"]
+            elif t == GroupOpType.AVG:
+                n = pc.cast(g[f"__n{i}"], pa.float64())
+                avg = pc.divide(pc.fill_null(g[f"__s{i}"], 0.0), n)
+                cols[op.alias] = pc.if_else(pc.greater(n, 0), avg, None)
+            else:
+                m = g[f"__m{i}"]
+                if f"__m{i}_nan" in g.column_names:
+                    nan = g[f"__m{i}_nan"]
+                    if t == GroupOpType.MIN:  # NaN only when nothing else
+                        nan = pc.and_(nan, pc.is_null(m))
+                    m = pc.if_else(nan, pa.scalar(float("nan"), m.type), m)
+                cols[op.alias] = m
+        return arrow_rows(pa.table(cols))
 
     def reset(self) -> None:
-        self.groups = {}
+        self.groups = None
 
-    def consumed(self, rows: list[dict[str, Any]]) -> int:
-        if rows and "__nrec" in rows[0]:
-            return sum(r["__nrec"] or 0 for r in rows)
-        # shared-scan rows: the per-member match count serves as __nrec;
-        # fall back to a COUNT metric if present
-        for i, op in enumerate(self.agg.operations):
-            if op.op == GroupOpType.COUNT:
-                return sum(r.get(f"__c{i}", 0) or 0 for r in rows)
-        return 0
+    def consumed(self, partial: pa.Table) -> int:
+        return pc.sum(partial["__nrec"]).as_py() or 0
 
 
 class CountDistinctState(QueryState):

@@ -117,7 +117,7 @@ def main() -> None:
                     phase["quant"] += time.perf_counter() - t
                     phase["n_quant"] += 1
                     return r
-                r = [x.asDict() for x in out.collect()], members
+                r = out.toArrow(), members
                 phase["collect"] += time.perf_counter() - t
                 return r
 
@@ -133,13 +133,7 @@ def main() -> None:
                     for rq, member_rows in zip(members.rqs, rows):
                         result[rq.id] = member_rows
                     continue
-                for row in rows:
-                    for m in members:
-                        if m.keyed and not row.get(f"{m.prefix}match"):
-                            continue
-                        result[m.rq.id].append(
-                            {o: row[i] for i, o in m.rename.items()}
-                        )
+                result.update(mq.split_members(rows, members))
             return result
 
         import bullet_storm_spark.streaming.engine as eng_mod

@@ -26,7 +26,9 @@ SETTINGS = settings(
 
 
 def _run_split(spark, query, cut_points):
-    engine = StreamingEngine(spark)
+    # a fixed engine clock: EngineConfig clamps every duration to
+    # MAX_QUERY_DURATION_MS = 10 s, which a cold JVM can outlive mid-run
+    engine = StreamingEngine(spark, clock=lambda: 1_000.0)
     engine.submit("q", query)
     cuts = sorted({0, *cut_points, len(ROWS)})
     for lo, hi in zip(cuts, cuts[1:]):
@@ -53,7 +55,7 @@ def test_group_state_split_invariant(spark, cuts):
                 GroupOperation(GroupOpType.AVG, "v", "av"),
             ],
         ),
-        duration_ms=3_600_000,  # 1h: a loaded machine outlived 10min once
+        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
     )
     whole = _run_split(spark, q, [])
     split = _run_split(spark, q, cuts)
@@ -66,7 +68,7 @@ def test_group_state_split_invariant(spark, cuts):
 def test_topk_state_split_invariant(spark, cuts):
     q = Query(
         aggregation=TopK(size=4, name="cnt", fields={"k": ""}),
-        duration_ms=3_600_000,  # 1h: a loaded machine outlived 10min once
+        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
     )
     assert _run_split(spark, q, []) == _run_split(spark, q, cuts)
 
@@ -78,6 +80,6 @@ def test_distribution_state_split_invariant(spark, cuts):
         aggregation=Distribution(
             field="v", dist_type=DistributionType.CDF, points=[10.0, 25.0]
         ),
-        duration_ms=3_600_000,  # 1h: a loaded machine outlived 10min once
+        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
     )
     assert _run_split(spark, q, []) == _run_split(spark, q, cuts)
