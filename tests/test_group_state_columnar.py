@@ -68,17 +68,13 @@ def test_group_all_without_data_emits_one_row():
     assert state.result() == [{"cnt": 0, "s": None, "av": None, "mx": None}]
 
 
-def _engine(spark, shared, queries):
+def _run(spark, shared, queries, batches):
+    # a fixed engine clock keeps every query live for the whole run
     engine = StreamingEngine(
         spark, clock=lambda: 1_000.0, enable_shared_scan=shared
     )
     for qid, q in queries.items():
         engine.submit(qid, q)
-    return engine
-
-
-def _run(spark, shared, queries, batches):
-    engine = _engine(spark, shared, queries)
     for b in batches:
         engine.process_batch(b)
     assert engine.shared_scan_queries == (len(queries) * len(batches) if shared else 0)
