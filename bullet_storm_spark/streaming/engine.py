@@ -292,10 +292,7 @@ class StreamingEngine:
             df = df.select(
                 *[f.expression.to_column().alias(f.name) for f in q.projection.fields]
             )
-        partial = rq.state.partial(df)
-        if rq.state.columnar:
-            return partial.toArrow()
-        return [r.asDict() for r in partial.collect()]
+        return rq.state.collect(rq.state.partial(df))
 
     def process_batch(
         self, batch_df: DataFrame, batch_id: int = 0, source: str | None = None
@@ -448,25 +445,31 @@ class StreamingEngine:
                         out = safe_partial(rq)
                         if out is not None:
                             partials[rq.id] = out
+            for rq in active:
+                if rq.id not in partials:
+                    continue
+                partial_rows = partials[rq.id]
+                # record-consumption accounting rides the partial job
+                # itself (state.consumed reads count columns the partial
+                # already computed — never an extra job)
+                try:
+                    rq.state.merge(partial_rows)
+                    consumed = rq.state.consumed(partial_rows)
+                except Exception as e:  # noqa: BLE001
+                    # a partial the state cannot fold (e.g. a nested-type
+                    # GROUP BY key: Arrow has no hash kernel for it) FAILs
+                    # that query only, like a broken plan
+                    failed[rq.id] = str(e)[:500]
+                    continue
+                rq.records_consumed += consumed
+                if consumed:
+                    self.metrics.increment(M.RECORDS_CONSUMED, consumed)
             for rq in list(active):
                 if rq.id in failed:
                     self.registry.remove(rq.id, QueryStatus.FAILED)
                     self._emit(rq.id, Clip.error(rq.id, [failed[rq.id]]))
                     active = [a for a in active if a.id != rq.id]
             for rq in active:
-                if rq.id in partials:
-                    partial_rows = partials[rq.id]
-                    # record-consumption accounting rides the partial job
-                    # itself (state.consumed reads count columns the
-                    # partial already computed — never an extra job)
-                    rq.state.merge(partial_rows)
-                    consumed = rq.state.consumed(partial_rows)
-                    rq.records_consumed += consumed
-                    if consumed:
-                        from bullet_storm_spark.streaming import metrics as M
-
-                        self.metrics.increment(M.RECORDS_CONSUMED, consumed)
-
                 # rate limiting (JoinBolt.java:159-160,194-208): FAIL with
                 # partial results + a structured RateLimitError object in
                 # the Clip meta (FilterBolt.java:111,191-193 error stream)

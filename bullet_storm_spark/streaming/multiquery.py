@@ -80,7 +80,6 @@ from bullet_storm_spark.streaming.state import (
     GroupState,
     RawState,
     TopKState,
-    arrow_rows,
 )
 
 
@@ -821,11 +820,12 @@ def split_members(table, members: list[_Member]) -> dict[str, Any]:
     """Each member's partial out of one aggregation job's Arrow table: its
     columns under their partial names, and for a keyed member only the
     groups its own rows reached (the others are artifacts of other
-    members' rows). Columnar states take the table, the rest row dicts."""
+    members' rows), in the form the member's merge() takes
+    (``QueryState.from_arrow``)."""
     out = {}
     for m in members:
         sub = table.select(list(m.rename)).rename_columns(list(m.rename.values()))
         if m.keyed:
             sub = sub.filter(pc.greater(table[f"{m.prefix}match"], 0))
-        out[m.rq.id] = sub if m.rq.state.columnar else arrow_rows(sub)
+        out[m.rq.id] = m.rq.state.from_arrow(sub)
     return out

@@ -12,15 +12,17 @@ the batch, fully distributed); what crosses to the driver is one bounded
 partial-result table per query per batch — the same wire contract as the
 reference's sketch bytes. The *merge* phase runs on the driver, bounded
 by each aggregation's size cap exactly like Bullet's sketches bound their
-state. GROUP ALL / GROUP BY partials arrive as one Arrow table and fold in
-with one pyarrow hash aggregation per batch (``columnar`` states); the
-other families' partials are few rows, folded in Python.
+state. Aggregation partials reach the driver as Arrow tables: GROUP ALL /
+GROUP BY fold one in with one pyarrow hash aggregation per batch; the
+other families' partials are few rows, turned into row dicts and folded in
+Python. RAW and QUANTILE partials are collected as Rows.
 
 Each QueryState implements:
   partial(df)  -> DataFrame   (batch -> bounded partial table, runs in Spark)
-  merge(rows)  -> None        (fold the partial into state, driver-side;
-                               a pyarrow.Table for columnar states, else
-                               a list of row dicts)
+  collect(p)   -> partial     (the partial on the driver, in merge()'s form)
+  from_arrow(t)-> partial     (merge()'s form of a partial's Arrow table:
+                               the table for GroupState, else row dicts)
+  merge(rows)  -> None        (fold the partial into state, driver-side)
   result()     -> list[dict]  (current emission, reference output shape)
   reset()      -> None        (window close — Querier.reset analogue)
   is_full()    -> bool        (RAW early-termination contract)
@@ -68,24 +70,33 @@ def _pylist(col: pa.ChunkedArray) -> list:
         for i in np.flatnonzero(col.is_null().to_numpy()):
             values[i] = None
         return values
-    # pyspark's own conversion turns toArrow()'s tz-aware UTC datetimes and
-    # bytes into the naive local datetimes and bytearray a Row holds
+    # pyspark's own conversion turns toArrow()'s tz-aware UTC datetimes into
+    # the naive local datetimes a Row holds; binary stays bytes, as collect()
+    # gives it under spark.sql.execution.pyspark.binaryAsBytes' default
     rows = ArrowTableToRowsConversion.convert(
         pa.table([col], ["v"]),
         from_arrow_schema(pa.schema([("v", t)])),
         return_as_tuples=True,
-        binary_as_bytes=False,
+        binary_as_bytes=True,
     )
     return [r[0] for r in rows]
 
 
-class QueryState:
-    # merge() and consumed() take the partial as one pyarrow.Table
-    # (collected with toArrow()) instead of a list of Row dicts
-    columnar = False
+def _row_dicts(partial: DataFrame) -> list[dict[str, Any]]:
+    return [r.asDict() for r in partial.collect()]
 
+
+class QueryState:
     def partial(self, df: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
+
+    def collect(self, partial: DataFrame):
+        return self.from_arrow(partial.toArrow())
+
+    def from_arrow(self, table: pa.Table):
+        # the one conversion of an aggregation partial, on the per-query and
+        # the shared-scan path alike
+        return arrow_rows(table)
 
     def merge(self, rows: list[dict[str, Any]]) -> None:  # pragma: no cover
         raise NotImplementedError
@@ -118,6 +129,9 @@ class RawState(QueryState):
         # per-batch limit: never ship more than the remaining capacity
         return df.limit(max(self.size - len(self.records), 0))
 
+    def collect(self, partial: DataFrame) -> list[dict[str, Any]]:
+        return _row_dicts(partial)
+
     def merge(self, rows: list[dict[str, Any]]) -> None:
         room = self.size - len(self.records)
         self.records.extend(rows[:room])
@@ -143,8 +157,6 @@ class GroupState(QueryState):
     exactly like GroupData (JoinBoltTest.java:663-693). The groups are one
     Arrow table in first-seen order, and each partial folds in with one
     hash aggregation."""
-
-    columnar = True
 
     _SUPPORTED = {
         GroupOpType.COUNT,
@@ -187,6 +199,9 @@ class GroupState(QueryState):
         # input-record count rides the same aggregation (consumed())
         aggs.append(F.count(F.lit(1)).alias("__nrec"))
         return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
+
+    def from_arrow(self, table: pa.Table) -> pa.Table:
+        return table
 
     def merge(self, partial: pa.Table) -> None:
         aggs = []
@@ -510,6 +525,11 @@ class DistributionState(QueryState):
         for p in self.points:
             bin_idx = bin_idx + (v >= F.lit(p)).cast("int")
         return df.groupBy(bin_idx.alias("__bin")).agg(F.count(F.lit(1)).alias("__c"))
+
+    def collect(self, partial: DataFrame):
+        if self.agg.dist_type == DistributionType.QUANTILE:
+            return _row_dicts(partial)
+        return super().collect(partial)
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         if self.agg.dist_type == DistributionType.QUANTILE:

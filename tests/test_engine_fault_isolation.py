@@ -1,9 +1,10 @@
 """One broken query must FAIL alone; the rest of the batch proceeds
 (JoinBolt init-error parity)."""
 
-from bullet_storm_spark import GroupAll, GroupOperation, GroupOpType, Query, Raw
+from bullet_storm_spark import GroupAll, GroupBy, GroupOperation, GroupOpType, Query, Raw
 from bullet_storm_spark.plans.expressions import eq
 from bullet_storm_spark.streaming import StreamingEngine
+from engine_helpers import frozen_engine
 
 
 def test_broken_query_fails_alone(spark):
@@ -29,3 +30,40 @@ def test_broken_query_fails_alone(spark):
     # next batch unaffected
     engine.process_batch(batch)
     assert engine.registry.queries["good"].state.result() == [{"cnt": 8}]
+
+
+def test_unmergeable_partial_fails_alone(spark):
+    # Arrow has no hash kernel for MIN over a list, so "bad"'s merge raises:
+    # it must FAIL alone, and "good", submitted after it, must still merge
+    queries = {
+        "bad": Query(
+            aggregation=GroupBy(
+                fields={"k": ""},
+                operations=[GroupOperation(GroupOpType.MIN, "xs", "mn")],
+            ),
+            duration_ms=600_000,
+        ),
+        "good": Query(
+            aggregation=GroupBy(
+                fields={"k": ""},
+                operations=[GroupOperation(GroupOpType.COUNT, None, "cnt")],
+            ),
+            duration_ms=600_000,
+        ),
+    }
+    batch = spark.createDataFrame(
+        [("a", [1, 2]), ("a", [0, 5]), ("b", [3])], "k string, xs array<int>"
+    )
+    for shared in (False, True):
+        engine = frozen_engine(spark, enable_shared_scan=shared)
+        for qid, q in queries.items():
+            engine.submit(qid, q)
+        engine.process_batch(batch)
+        assert engine.shared_scan_queries == (2 if shared else 0)
+        ((qid, clip),) = engine.results
+        assert qid == "bad" and clip.meta.get("signal") == "FAIL"
+        assert "bad" not in engine.registry.queries
+        engine.process_batch(batch)
+        assert sorted(
+            map(str, engine.registry.queries["good"].state.result())
+        ) == ["{'k': 'a', 'cnt': 4}", "{'k': 'b', 'cnt': 2}"]

@@ -8,9 +8,16 @@ from decimal import Decimal
 
 import pyarrow as pa
 
-from bullet_storm_spark import GroupAll, GroupBy, GroupOperation, GroupOpType, Query
-from bullet_storm_spark.streaming import StreamingEngine
+from bullet_storm_spark import (
+    CountDistinct,
+    GroupAll,
+    GroupBy,
+    GroupOperation,
+    GroupOpType,
+    Query,
+)
 from bullet_storm_spark.streaming.state import GroupState
+from engine_helpers import live_results, run_fleet
 
 
 def _op(t, field, alias):
@@ -69,16 +76,9 @@ def test_group_all_without_data_emits_one_row():
 
 
 def _run(spark, shared, queries, batches):
-    # a fixed engine clock keeps every query live for the whole run
-    engine = StreamingEngine(
-        spark, clock=lambda: 1_000.0, enable_shared_scan=shared
-    )
-    for qid, q in queries.items():
-        engine.submit(qid, q)
-    for b in batches:
-        engine.process_batch(b)
+    engine = run_fleet(spark, queries, batches, shared)
     assert engine.shared_scan_queries == (len(queries) * len(batches) if shared else 0)
-    return {qid: rq.state.result() for qid, rq in engine.registry.queries.items()}
+    return live_results(engine)
 
 
 def test_nan_key_is_one_group_on_both_paths(spark):
@@ -206,3 +206,41 @@ def test_value_types_match_row_path(spark):
             Decimal("-0.25"),
             None,
         }
+
+
+def test_binary_values_match_row_path(spark):
+    # binary keys and MIN/MAX over binary render as collect() gives them
+    # (bytes), and an exact COUNT DISTINCT can hash them on both paths
+    schema = "b binary, v double"
+    batches = [
+        spark.createDataFrame([(b"ab", 1.0), (b"cd", 2.0), (None, 3.0)], schema),
+        spark.createDataFrame([(b"ab", 4.0), (b"ef", 5.0)], schema),
+    ]
+    queries = {
+        "by_b": Query(
+            aggregation=GroupBy(
+                fields={"b": ""},
+                operations=[
+                    _op(GroupOpType.COUNT, None, "cnt"),
+                    _op(GroupOpType.MAX, "b", "mx"),
+                ],
+            ),
+            duration_ms=600_000,
+        ),
+        "cd_b": Query(
+            aggregation=CountDistinct(fields=["b"], name="u"), duration_ms=600_000
+        ),
+    }
+    from pyspark.sql import functions as F
+
+    union = batches[0].unionByName(batches[1])
+    expected = sorted(
+        repr(r.asDict())
+        for r in union.groupBy("b")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.max("b").alias("mx"))
+        .collect()
+    )
+    for shared in (False, True):
+        out = _run(spark, shared, queries, batches)
+        assert sorted(map(repr, out["by_b"])) == expected, shared
+        assert out["cd_b"] == [{"u": 3}], shared

@@ -17,14 +17,8 @@ from bullet_storm_spark import (
     TopK,
 )
 from bullet_storm_spark.plans.expressions import eq, fld, gt
-from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
-
-
-def _frozen_clock() -> float:
-    # a fixed engine clock keeps every query live for the whole test:
-    # EngineConfig clamps each duration (600_000 below) to
-    # MAX_QUERY_DURATION_MS = 10 s, which a cold JVM can outlive mid-test
-    return 1_000.0
+from bullet_storm_spark.streaming import QueryRegistry
+from engine_helpers import frozen_engine, live_results, run_fleet
 
 
 def _mixed_queries():
@@ -152,11 +146,7 @@ def batches(spark):
 
 
 def _run(spark, batches, shared: bool):
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=shared)
-    for qid, q in _mixed_queries().items():
-        engine.submit(qid, q)
-    for b in batches:
-        engine.process_batch(b)
+    engine = run_fleet(spark, _mixed_queries(), batches, shared)
     outcomes = {
         qid: _outcome(rq) for qid, rq in engine.registry.queries.items()
     }
@@ -179,7 +169,7 @@ def test_shared_scan_equals_per_query(spark, batches):
 
 
 def test_shared_scan_single_query_falls_back(spark, batches):
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=True)
+    engine = frozen_engine(spark, enable_shared_scan=True)
     engine.submit("only", _mixed_queries()["grp_by"])
     engine.process_batch(batches[0])
     assert engine.shared_scan_queries == 0  # <2 shareable -> per-query path
@@ -189,7 +179,7 @@ def test_shared_scan_single_query_falls_back(spark, batches):
 def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
     # the ChunkPlan cache must rebuild when a member leaves the fleet
     # (killed query) and keep producing per-query-identical results
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=True)
+    engine = frozen_engine(spark, enable_shared_scan=True)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
@@ -212,7 +202,7 @@ def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
     # killing the fleet below the shareable threshold must drop the
     # cached ChunkPlans (they hold the retired queries' state)
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=True)
+    engine = frozen_engine(spark, enable_shared_scan=True)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
@@ -244,7 +234,7 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
     # A RAW fleet on the shared path must keep the per-query contracts:
     # each query collects EXACTLY its limit of rows matching ITS filter
     # (projected per ITS projection) and early-COMPLETEs when full.
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=True)
+    engine = frozen_engine(spark, enable_shared_scan=True)
     for qid, q in _raw_fleet(6).items():
         engine.submit(qid, q)
     emitted = {}
@@ -272,15 +262,8 @@ def test_shared_raw_fleet_equals_per_query_counts(spark, batches):
     # batch 0 supplies 59-i matches, batch 1 another 19-i — never full at
     # size 90, so the fleet stays live and shares BOTH batches
     def run(shared):
-        engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=shared)
-        for qid, q in _raw_fleet(4, size=90, off=20).items():
-            engine.submit(qid, q)
-        for b in batches:
-            engine.process_batch(b)
-        return {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }, engine
+        engine = run_fleet(spark, _raw_fleet(4, size=90, off=20), batches, shared)
+        return live_results(engine), engine
 
     base, _ = run(False)
     got, engine = run(True)
@@ -339,15 +322,8 @@ def test_shared_quantile_fleet_equals_per_query(spark, batches):
         }
 
     def run(shared):
-        engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=shared)
-        for qid, q in fleet().items():
-            engine.submit(qid, q)
-        for b in batches:
-            engine.process_batch(b)
-        return {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }, engine
+        engine = run_fleet(spark, fleet(), batches, shared)
+        return live_results(engine), engine
 
     base, _ = run(False)
     got, engine = run(True)
@@ -458,17 +434,11 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
     fleet = {f"rf{seed}-{i}": rand_query(i) for i in range(rng.randint(6, 14))}
 
     def run(shared):
-        engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=shared)
-        for qid, q in fleet.items():
-            engine.submit(qid, q)
+        engine = run_fleet(spark, fleet, batches, shared)
         done = {}
-        engine.on_result(lambda qid, clip: done.setdefault(qid, clip))
-        for b in batches:
-            engine.process_batch(b)
-        live = {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }
+        for qid, clip in engine.results:
+            done.setdefault(qid, clip)
+        live = live_results(engine)
         consumed = {
             qid: rq.records_consumed
             for qid, rq in engine.registry.queries.items()
@@ -633,7 +603,7 @@ def test_batch_jobs_and_single_reader_skips_persist(
         lambda self, *a, **k: calls.append(1) or real_persist(self, *a, **k),
     )
     q = _mixed_queries()
-    engine = StreamingEngine(spark, clock=_frozen_clock, enable_shared_scan=True)
+    engine = frozen_engine(spark, enable_shared_scan=True)
     engine.submit("grp_all", q["grp_all"])
     engine.submit("pmf", q["pmf"])
     engine.submit("cd", q["cd"])

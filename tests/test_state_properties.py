@@ -14,7 +14,7 @@ from bullet_storm_spark import (
     Query,
     TopK,
 )
-from bullet_storm_spark.streaming import StreamingEngine
+from engine_helpers import live_results, run_fleet
 
 ROWS = [(f"k{i % 6}", float(i % 37)) for i in range(300)]
 
@@ -26,16 +26,13 @@ SETTINGS = settings(
 
 
 def _run_split(spark, query, cut_points):
-    # a fixed engine clock: EngineConfig clamps every duration to
-    # MAX_QUERY_DURATION_MS = 10 s, which a cold JVM can outlive mid-run
-    engine = StreamingEngine(spark, clock=lambda: 1_000.0)
-    engine.submit("q", query)
     cuts = sorted({0, *cut_points, len(ROWS)})
-    for lo, hi in zip(cuts, cuts[1:]):
-        chunk = ROWS[lo:hi]
-        if chunk:
-            engine.process_batch(spark.createDataFrame(chunk, "k string, v double"))
-    return engine.registry.queries["q"].state.result()
+    batches = [
+        spark.createDataFrame(ROWS[lo:hi], "k string, v double")
+        for lo, hi in zip(cuts, cuts[1:])
+        if hi > lo
+    ]
+    return live_results(run_fleet(spark, {"q": query}, batches))["q"]
 
 
 splits = st.lists(st.integers(1, len(ROWS) - 1), min_size=0, max_size=4)
@@ -55,7 +52,7 @@ def test_group_state_split_invariant(spark, cuts):
                 GroupOperation(GroupOpType.AVG, "v", "av"),
             ],
         ),
-        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
+        duration_ms=3_600_000,  # clamped to 10 s; run_fleet freezes the clock
     )
     whole = _run_split(spark, q, [])
     split = _run_split(spark, q, cuts)
@@ -68,7 +65,7 @@ def test_group_state_split_invariant(spark, cuts):
 def test_topk_state_split_invariant(spark, cuts):
     q = Query(
         aggregation=TopK(size=4, name="cnt", fields={"k": ""}),
-        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
+        duration_ms=3_600_000,  # clamped to 10 s; run_fleet freezes the clock
     )
     assert _run_split(spark, q, []) == _run_split(spark, q, cuts)
 
@@ -80,6 +77,6 @@ def test_distribution_state_split_invariant(spark, cuts):
         aggregation=Distribution(
             field="v", dist_type=DistributionType.CDF, points=[10.0, 25.0]
         ),
-        duration_ms=3_600_000,  # clamped to 10 s; _run_split freezes the clock
+        duration_ms=3_600_000,  # clamped to 10 s; run_fleet freezes the clock
     )
     assert _run_split(spark, q, []) == _run_split(spark, q, cuts)
