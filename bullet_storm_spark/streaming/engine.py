@@ -5,9 +5,10 @@ Dataflow per batch (reference parity, FilterBolt.java:148-175 +
 JoinBolt.java:130-259):
 
   1. drain the control channel (QuerySpout): submissions + signals
-  2. for each active query: filter -> project the batch (raw-name filter
-     semantics), compute the bounded partial aggregate IN SPARK, merge into
-     the query's driver-side state
+  2. compute every active query's bounded partial IN SPARK with the
+     shared-scan planner (filter -> project -> aggregate, raw-name filter
+     semantics; a lone query is a fleet of one), and merge each into its
+     query's driver-side state
   3. lifecycle tick: RAW-full -> done; duration expired -> done; rate limit
      exceeded -> FAIL with partial result; window closed -> emit + reset
   4. emit Clips (records + metadata: query id, receive/finish time, window
@@ -20,16 +21,15 @@ Windows (SURVEY.md §2.5):
     the reference's 100 ms tick clock)
   * SlidingRecordWindow(n)  -> emit + reset every n records consumed
 
-The batch work stays fully distributed (Catalyst plans each query's
+The batch work stays fully distributed (Catalyst plans every query's
 filter+partial-agg over the batch); only bounded partial tables reach the
 driver — the same wire discipline as FilterBolt->JoinBolt sketch bytes.
-Scale note: with N concurrent queries the shared-scan multiplexer
-(streaming/multiquery.py) folds every aggregation family into one job per
-distinct grouping column set, RAW fleets into one mapInPandas pass per 64
-members, and QUANTILE fleets into one KLL-partial pass per 16; the
-query-predicate partitioner (streaming/partitioner.py) prunes
-provably-non-matching queries before any job runs. Batch caching
-amortizes whatever remains per-query.
+The shared-scan planner (streaming/multiquery.py) folds every aggregation
+family into one job per distinct grouping column set, RAW fleets into one
+mapInPandas pass per 64 members, and QUANTILE fleets into one KLL-partial
+pass per 16; the query-predicate partitioner (streaming/partitioner.py)
+prunes provably-non-matching queries before any job runs. The batch is
+persisted when more than one job reads it.
 """
 
 from __future__ import annotations
@@ -72,10 +72,8 @@ class StreamingEngine:
         channel: ControlChannel | None = None,
         clock: Callable[[], float] = time.time,
         rate_limit_records_per_s: int | None = None,
-        cache_batches: bool = True,
         config: "EngineConfig | None" = None,
         enable_query_partitioner: bool = False,
-        enable_shared_scan: bool = True,
     ) -> None:
         from bullet_storm_spark.config import EngineConfig
 
@@ -91,11 +89,9 @@ class StreamingEngine:
             if rate_limit_records_per_s is not None
             else self.config.rate_limit_records_per_s
         )
-        self.cache_batches = cache_batches
         self.enable_query_partitioner = enable_query_partitioner
-        self.enable_shared_scan = enable_shared_scan
         self.queries_pruned = 0  # partitioner effectiveness counter
-        self.shared_scan_queries = 0  # queries served by shared-scan jobs
+        self.shared_scan_queries = 0  # queries the batch scans served
         self.batches_processed = 0
         self.batch_jobs = 0  # Spark jobs the last batch's partials ran
         self.results: list[tuple[str, Clip]] = []  # in-memory ResultBolt
@@ -105,8 +101,8 @@ class StreamingEngine:
 
         self.metrics = EngineMetrics()
         self._listener = None  # Spark listener bridge once attached
-        # concurrent job-submission width: each per-query/chunk partial is
-        # a tiny job (AQE coalesces its shuffle), so the binding cost is
+        # concurrent job-submission width: each chunk partial is a tiny
+        # job (AQE coalesces its shuffle), so the binding cost is
         # submission round-trips, not cores — measured on local[32]:
         # 100-query batch 4.9s at width 8, 3.0s at width 24
         try:
@@ -235,6 +231,15 @@ class StreamingEngine:
             clip.add_meta(**{ERRORS_KEY: errors})
         self._emit(rq.id, clip)
 
+    def _fail(self, rq, error: str) -> None:
+        """FAIL a query whose plan or merge raised (JoinBolt error path,
+        JoinBolt.java:261-268); the rest of the batch proceeds."""
+        from bullet_storm_spark.streaming import metrics as M
+
+        self.registry.remove(rq.id, QueryStatus.FAILED)
+        self.metrics.increment(M.QUERIES_FAILED)
+        self._emit(rq.id, Clip.error(rq.id, [error]))
+
     def _window_tick(self, rq, now_ms: int) -> None:
         """Emit + reset on window close (JoinBolt.java:252-259 emitWindow)."""
         win = rq.query.window
@@ -279,21 +284,6 @@ class StreamingEngine:
                         rq.state.reset()
                     rq.window_record_marker += win.emit_every
 
-    def _compute_partial(self, rq, cached: DataFrame):
-        """Filter -> project -> bounded partial aggregate for one query over
-        the batch. Pure Spark job; safe to run concurrently across queries
-        (the Spark scheduler interleaves jobs; FAIR mode recommended for
-        many live queries)."""
-        q = rq.query
-        df = cached
-        if q.filter is not None:
-            df = df.where(q.filter.to_column())
-        if q.projection.fields is not None:
-            df = df.select(
-                *[f.expression.to_column().alias(f.name) for f in q.projection.fields]
-            )
-        return rq.state.collect(rq.state.partial(df))
-
     def process_batch(
         self, batch_df: DataFrame, batch_id: int = 0, source: str | None = None
     ) -> None:
@@ -306,11 +296,11 @@ class StreamingEngine:
         lifecycle still advances. ``source=None`` (the reference's
         single-stream model) feeds every live query.
 
-        With multiple live queries the per-query partial jobs are submitted
-        from a thread pool so Spark schedules them concurrently over the
-        (cached) batch — the multi-query multiplexing the reference got from
-        independent bolts (SURVEY.md §7.3 known-hard #1); state merge and
-        lifecycle stay single-threaded in stable submission order."""
+        Every scanned query's partial comes from the shared-scan planner,
+        whose chunk jobs Spark runs concurrently over the batch — the
+        multi-query multiplexing the reference got from independent bolts
+        (SURVEY.md §7.3 known-hard #1); state merge and lifecycle stay
+        single-threaded in stable submission order."""
         self._drain_control()
         self.batches_processed += 1
         from bullet_storm_spark.streaming import metrics as M
@@ -319,13 +309,10 @@ class StreamingEngine:
         active = self.registry.active()
         now_ms = int(self.clock() * 1000)
         self.batch_jobs = 0
-        if len(active) < 2:
-            # fleet shrank below any possible shareable threshold: drop
-            # the cached ChunkPlans so retired queries' state can be
-            # collected (the later shared-scan check also clears this,
-            # but never runs when the batch short-circuits here)
-            self._drop_shared_plans()
         if not active:
+            # drop the cached plans so retired queries' state can be
+            # collected
+            self._drop_shared_plans()
             return
         if source is not None:
             lifecycle_only = [rq for rq in active if rq.query.source != source]
@@ -349,102 +336,49 @@ class StreamingEngine:
                 values = part.batch_values(batch_df)
                 scan = [rq for rq in active if part.should_scan(rq.id, values)]
                 self.queries_pruned += len(active) - len(scan)
-        # shared scan (multiquery.py): collapse shareable queries into one
-        # job per distinct grouping column set; the rest run per-query
-        shared: list = []
-        if self.enable_shared_scan and len(scan) > 1:
-            from bullet_storm_spark.streaming.multiquery import is_shareable
-
-            shared = [rq for rq in scan if is_shareable(rq)]
-            if len(shared) < 2:
-                shared = []
-            else:
-                scan = [rq for rq in scan if rq not in shared]
-        chunks: list = []
-        if not shared:
-            # fleet shrank below the shareable threshold: drop the cached
-            # plans so the retired queries' RunningQuery objects (and their
-            # accumulated state) can be collected
+        try:
+            chunks = self._shared_chunks(scan)
+        except Exception:  # noqa: BLE001 - each member re-plans alone below
             self._drop_shared_plans()
-        else:
-            try:
-                chunks = self._shared_chunks(shared)
-            except Exception:
-                # planning failure (e.g. one member's plan is broken): run
-                # the fleet on the fault-isolated per-query path so only
-                # the offender FAILs
-                self._drop_shared_plans()
-                scan, shared = scan + shared, []
-        # the Spark jobs that will read the batch: one per per-query
-        # partial, one per shared chunk
-        self.batch_jobs = len(scan) + len(chunks)
+            chunks = None
+        # the Spark jobs that will read the batch: one per chunk (the
+        # fault-isolated rerun below plans at least one per query)
+        self.batch_jobs = len(scan) if chunks is None else len(chunks)
         # persist the batch only if the caller hasn't already: a pre-
         # normalized, pre-persisted batch (bench.py, replayed batches)
         # passes straight through, while a fresh foreachBatch frame is
         # persisted for the multi-job fan-out and ALWAYS unpersisted after
-        # — cache() returns self in PySpark, so the old `cached is not
-        # batch_df` guard never fired and every micro-batch's cache entry
-        # leaked for the life of the stream
         we_persisted = False
-        if (
-            self.cache_batches
-            and self.batch_jobs > 1
-            and not getattr(batch_df, "is_cached", False)
-        ):
+        if self.batch_jobs > 1 and not getattr(batch_df, "is_cached", False):
             batch_df.persist()
             we_persisted = True
-        cached = batch_df
         try:
+            from bullet_storm_spark.streaming.multiquery import shared_partials
+
             failed: dict[str, str] = {}
-
-            def safe_partial(rq):
-                # per-query fault isolation: a broken plan FAILs that query
-                # only (JoinBolt error path, JoinBolt.java:261-268) — the
-                # rest of the batch proceeds
+            partials: dict = {}
+            if chunks is not None:
                 try:
-                    return self._compute_partial(rq, cached)
-                except Exception as e:  # noqa: BLE001
-                    failed[rq.id] = str(e)[:500]
-                    return None
-
-            if len(scan) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(len(scan), self.job_pool_width)
-                ) as pool:
-                    partials = dict(
-                        zip([rq.id for rq in scan], pool.map(safe_partial, scan))
-                    )
-            elif scan:
-                partials = {scan[0].id: safe_partial(scan[0])}
-            else:
-                partials = {}
-            partials = {k: v for k, v in partials.items() if v is not None}
-            if shared:
-                from bullet_storm_spark.streaming.multiquery import (
-                    shared_partials,
-                )
-
-                try:
-                    for qid, rows in shared_partials(
-                        cached,
-                        shared,
+                    partials = shared_partials(
+                        batch_df,
+                        scan,
                         pool_width=self.job_pool_width,
                         chunks=chunks,
                         bound_cache=self._bound_cache,
-                    ).items():
-                        partials[qid] = rows
-                    self.shared_scan_queries += len(shared)
-                except Exception:
-                    # execution failure: fall back to the fault-isolated
-                    # per-query path so only the offender FAILs; drop the
-                    # cached plans so the next batch re-plans from scratch
+                    )
+                except Exception:  # noqa: BLE001 - each member reruns alone
                     self._drop_shared_plans()
-                    for rq in shared:
-                        out = safe_partial(rq)
-                        if out is not None:
-                            partials[rq.id] = out
+                    chunks = None
+            if chunks is None:
+                # planning or a shared job raised: rerun each member as a
+                # fleet of one, so only the offender FAILs (JoinBolt error
+                # path, JoinBolt.java:261-268)
+                for rq in scan:
+                    try:
+                        partials.update(shared_partials(batch_df, [rq]))
+                    except Exception as e:  # noqa: BLE001
+                        failed[rq.id] = str(e)[:500]
+            self.shared_scan_queries += len(scan)
             for rq in active:
                 if rq.id not in partials:
                     continue
@@ -464,11 +398,10 @@ class StreamingEngine:
                 rq.records_consumed += consumed
                 if consumed:
                     self.metrics.increment(M.RECORDS_CONSUMED, consumed)
-            for rq in list(active):
+            for rq in active:
                 if rq.id in failed:
-                    self.registry.remove(rq.id, QueryStatus.FAILED)
-                    self._emit(rq.id, Clip.error(rq.id, [failed[rq.id]]))
-                    active = [a for a in active if a.id != rq.id]
+                    self._fail(rq, failed[rq.id])
+            active = [rq for rq in active if rq.id not in failed]
             for rq in active:
                 # rate limiting (JoinBolt.java:159-160,194-208): FAIL with
                 # partial results + a structured RateLimitError object in
@@ -477,8 +410,6 @@ class StreamingEngine:
                     elapsed_s = max((now_ms - rq.receive_time_ms) / 1000.0, 0.001)
                     rate = rq.records_consumed / elapsed_s
                     if rate > self.rate_limit:
-                        from bullet_storm_spark.streaming import metrics as M
-
                         self.metrics.increment(M.QUERIES_RATE_EXCEEDED)
                         self._finish(
                             rq,
@@ -519,9 +450,9 @@ class StreamingEngine:
         self._raw_chunk_cache = None
         self._bound_cache.clear()
 
-    def _shared_chunks(self, shared: list) -> list:
-        """The shared fleet's chunk plans (RAW passes first), from the plan
-        caches; a cache rebuilds only when its half of the fleet changed."""
+    def _shared_chunks(self, fleet: list) -> list:
+        """The fleet's chunk plans (RAW passes first), from the plan caches;
+        a cache rebuilds only when its half of the fleet changed."""
         from bullet_storm_spark.streaming.multiquery import (
             plan_chunks,
             plan_raw_chunks,
@@ -531,7 +462,7 @@ class StreamingEngine:
         # the one split definition (multiquery.split_fleet) keys BOTH
         # caches, so the cache layout can't drift from the planner's own
         # split
-        raw_fleet, agg_fleet = split_fleet(shared)
+        raw_fleet, agg_fleet = split_fleet(fleet)
         key = tuple((rq.id, id(rq)) for rq in agg_fleet)
         if key != self._chunk_cache_key:
             self._chunk_cache = plan_chunks(agg_fleet)

@@ -1,8 +1,8 @@
 """Shared-scan multi-query evaluation — N live queries, few Spark jobs.
 
-The engine's baseline multiplexing runs one job per live query per batch.
-This planner batches every *shareable* query into one aggregation job per
-DISTINCT GROUPING COLUMN SET:
+The engine computes every live query's partial here, whether it runs alone
+or in a fleet (a lone query is a fleet of one). The planner batches the
+aggregation queries into one job per DISTINCT GROUPING COLUMN SET:
 
   pre-select: per job -> each member query's boolean filter column f_i, its
               value columns, and the job's canonical key columns (queries
@@ -19,30 +19,30 @@ The key-set rule: a member's key-set is the plain grouping columns of its
 query, whatever the family. GROUP BY and TOP K on the same field are one
 job — TOP K renders its key as a string (``coalesce(cast(k as string),
 'null')``) per output group inside ``agg()``, and ``TopKState.merge`` sums
-rows that render alike, so NULL and a literal ``'null'`` merge exactly as on
-the per-query path. GROUP ALL, COUNT DISTINCT and FREQ/CUMFREQ (PMF/CDF)
-are keyless: PMF/CDF members carry a pre-selected bin index and aggregate
-one conditional count per bin into an ``__bins`` array, as long as the
-spec has at most MAX_SHARED_BINS bins. A longer point list (a REGION spec
-can yield hundreds of points, and as many conditional sums in one aggregate
-would blow codegen limits) keeps a keyed job on its own bin expression.
+rows that render alike, so NULL and a literal ``'null'`` merge into one
+row, as the batch TOP K renders them. GROUP ALL, COUNT DISTINCT and
+FREQ/CUMFREQ (PMF/CDF) are keyless: PMF/CDF members carry a pre-selected
+bin index and aggregate one conditional count per bin into an ``__bins``
+array, as long as the spec has at most MAX_SHARED_BINS bins. A longer
+point list (a REGION spec can yield hundreds of points, and as many
+conditional sums in one aggregate would blow codegen limits) keeps a keyed
+job on its own bin expression.
 
-One caveat of the shared key: Spark normalizes -0.0 to 0.0 in grouping
-keys, so a TOP K over a floating-point field reports -0.0 rows under
-"0.0" on this path (the per-query path renders them apart).
+Spark normalizes -0.0 to 0.0 in grouping keys, so a TOP K over a
+floating-point field reports -0.0 rows under "0.0", as GROUP BY does.
 
 With Q queries over K distinct key-sets this is K jobs instead of Q — e.g.
 a fleet of GROUP ALL health queries is ONE keyless aggregate regardless of
 fleet size. This is the reference's QueryManager one-record-many-queries
 fan-out (SURVEY.md §4 row 1 / §7.3 known-hard #1) as Catalyst plans.
 
-Shareable: GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT, DISTRIBUTION
-PMF/CDF — anything whose partial is a (possibly keyless) hash aggregation;
-their per-member match count doubles as the record-consumption metric, so
-they stay shareable under rate limits. RAW fleets (the reference's most common
-query shape, ``T/JoinBoltTest.java:340-351`` makeRawQuery) share ONE
-mapInPandas pass per <=MAX_RAW_MEMBERS_PER_JOB members: every member's
-filter and projection evaluate JVM-side into a nullable struct column,
+Aggregation jobs: GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT,
+DISTRIBUTION PMF/CDF — anything whose partial is a (possibly keyless) hash
+aggregation; the per-member match count doubles as the record-consumption
+metric. RAW fleets (the reference's most common query shape,
+``T/JoinBoltTest.java:340-351`` makeRawQuery) share ONE mapInPandas pass
+per <=MAX_RAW_MEMBERS_PER_JOB members: every member's filter and
+projection evaluate JVM-side into a nullable struct column,
 rows matching no member are dropped JVM-side, and the Python stage only
 caps each member at its limit per partition; past RAW_FOLD_FANIN scan
 partitions one coalesce + re-cap fold level bounds the driver collect
@@ -50,14 +50,13 @@ at O(RAW_FOLD_FANIN x sum(limits)) rows at ANY partition count (the
 sketch tree-fold discipline — without it a 100k-partition batch could
 funnel partitions x sum(limits) rows to the driver). The
 member's CURRENT remaining capacity is applied driver-side at split
-time so the cached batch-independent plan survives capacity decay.
-QUANTILE fleets likewise share one mapInPandas pass per
-<=MAX_QUANTILE_MEMBERS_PER_JOB members, each member folding its
-filtered values into its own mergeable KLL summary (identical
-compression to the per-query partial, so the paths produce the same
-summaries for the same partitioning).
-Not shareable: record-window queries (emission timing is per-query) —
-those run on the per-query path.
+time so the cached batch-independent plan survives capacity decay. A
+lone RAW query skips the pass: it is a ``where -> select -> limit`` job,
+which stops scanning once the limit is met. QUANTILE fleets likewise
+share one mapInPandas pass per <=MAX_QUANTILE_MEMBERS_PER_JOB members,
+each member folding its filtered values into its own mergeable KLL
+summary. Window emission (record windows included) is per query and runs
+after the merge, so it never changes the plan.
 """
 
 from __future__ import annotations
@@ -72,7 +71,6 @@ from bullet_storm_spark.operators.top_k import NULL_RENDERING
 from bullet_storm_spark.plans.query import (
     DistributionType,
     GroupOpType,
-    SlidingRecordWindow,
 )
 from bullet_storm_spark.streaming.state import (
     CountDistinctState,
@@ -81,27 +79,6 @@ from bullet_storm_spark.streaming.state import (
     RawState,
     TopKState,
 )
-
-
-def is_shareable(rq) -> bool:
-    if isinstance(rq.query.window, SlidingRecordWindow):
-        return False
-    # RAW: shipped rows ARE the consumed records, and the shared pass ships
-    # exactly the per-query path's rows (capped at the remaining capacity
-    # at split time). QUANTILE members share one mapInPandas pass building
-    # each member's mergeable KLL summary. Every other family carries a
-    # per-member match count, so accounting is identical under a rate
-    # limit too.
-    return isinstance(
-        rq.state,
-        (
-            GroupState,
-            TopKState,
-            RawState,
-            DistributionState,
-            CountDistinctState,
-        ),
-    )
 
 
 @dataclass
@@ -170,7 +147,7 @@ def plan_jobs(queries) -> list[_Job]:
 
 def _bin_index(col: Column, points) -> Column:
     """The PMF/CDF bin of a value: how many split points it reaches (NULL
-    for a NULL value) — the same expression as DistributionState.partial."""
+    for a NULL value)."""
     v = col.cast("double")
     bin_idx = F.lit(0)
     for pt in points:
@@ -221,9 +198,7 @@ def _add_agg_cols(
         vname = f"{p}cdk"
         job.value_cols[vname] = F.when(f_ref, key)
         if state.agg.exact:
-            # raw key values, nulls excluded — exactly the per-query
-            # distinct partial's contents, so the driver-side set union
-            # is path-independent
+            # raw key values, nulls excluded, for the driver-side set union
             add(F.collect_set(F.col(vname)), "ks", "__ks")
         else:
             add(F.hll_sketch_agg(F.col(vname)), "sk", "__sketch")
@@ -329,12 +304,17 @@ class RawChunkPlan:
     _alive_filter: Any = None
 
 
-def _plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
+def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
+    """The RAW fleet planner (the engine's split RAW plan cache calls this
+    directly on ``split_fleet``'s first half)."""
     chunks: list[RawChunkPlan] = []
     for start in range(0, len(raw_queries), MAX_RAW_MEMBERS_PER_JOB):
         members = raw_queries[start : start + MAX_RAW_MEMBERS_PER_JOB]
-        flag_cols, payload_cols, caps = [], [], []
-        for i, rq in enumerate(members):
+        caps = [rq.state.size for rq in members]
+        flag_cols, payload_cols = [], []
+        # a lone member needs no pass columns: it binds straight from its
+        # query (_raw_chunk_folded_df)
+        for i, rq in enumerate(members if len(members) > 1 else ()):
             q = rq.query
             fcol = (
                 F.coalesce(q.filter.to_column(), F.lit(False))
@@ -355,7 +335,6 @@ def _plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
                 payload = None
             flag_cols.append(fcol.alias(f"__f{i}"))
             payload_cols.append(payload)
-            caps.append(rq.state.size)
         chunks.append(RawChunkPlan(flag_cols, payload_cols, caps, list(members)))
     return chunks
 
@@ -369,9 +348,9 @@ MAX_QUANTILE_MEMBERS_PER_JOB = 16
 class QuantileChunkPlan:
     """One shared QUANTILE pass: per member i a filter flag ``f{i}`` and
     a filtered double value column ``q{i}``; the Python stage folds each
-    member's values into its own KLL accumulator (the same deterministic
-    compression as DistributionState.partial), one row per (partition,
-    member) out, tree-merged executor-side past TREE_FANIN partitions."""
+    member's values into its own KLL accumulator (the deterministic
+    compression of KLLSummary), one row per (partition, member) out,
+    tree-merged executor-side past TREE_FANIN partitions."""
 
     pre_cols: list
     rqs: list[Any]
@@ -400,11 +379,10 @@ def _quantile_chunk_df(
     batch_df: DataFrame, cp: QuantileChunkPlan
 ) -> DataFrame:
     """One job for every QUANTILE member: per-partition per-member KLL
-    summaries (self-contained closures — the same deterministic
-    alternate-keep compression as DistributionState.partial, so shared
-    and per-query paths produce IDENTICAL summaries for the same
-    partitioning), tree-merged executor-side, rows shaped exactly like
-    the per-query partial (__levels/__n/__nrec) for state.merge.
+    summaries (self-contained closures — cloudpickle ships them by value,
+    with no package import on workers — mirroring KLLSummary._compress's
+    deterministic alternate-keep compression), tree-merged executor-side,
+    as __levels/__n/__nrec rows for state.merge.
     Returns the BOUND DataFrame (batch-independent closures), so the
     engine's bound cache can reuse it across replays of one frame."""
     n = len(cp.rqs)
@@ -510,13 +488,6 @@ def _collect_quantile_chunk(
     return result
 
 
-def _run_quantile_chunk(
-    batch_df: DataFrame, cp: QuantileChunkPlan
-) -> list[list[dict]]:
-    """Bind + collect in one call (the uncached path)."""
-    return _collect_quantile_chunk(_quantile_chunk_df(batch_df, cp), cp)
-
-
 # first-fold fan-in of the shared RAW pass: past this many scan
 # partitions a coalesce(fanin) + re-cap level bounds the driver collect
 # at O(fanin x sum of member limits) rows REGARDLESS of partition count
@@ -530,10 +501,20 @@ def _raw_chunk_folded_df(batch_df: DataFrame, cp: RawChunkPlan) -> DataFrame:
     """The shared RAW pass as a bounded DataFrame: per-partition
     first-rows capping, then (past RAW_FOLD_FANIN partitions) one
     executor-side re-cap fold so at most RAW_FOLD_FANIN x sum(caps)
-    rows ever reach the driver."""
+    rows ever reach the driver. A lone member is a plain ``where ->
+    select -> limit`` job instead: no Python stage, and the limit stops
+    the scan early."""
     import pandas as pd
 
     n = len(cp.rqs)
+    if n == 1:
+        q = cp.rqs[0].query
+        df = batch_df if q.filter is None else batch_df.where(q.filter.to_column())
+        if q.projection.fields is not None:
+            df = df.select(
+                *[f.expression.to_column().alias(f.name) for f in q.projection.fields]
+            )
+        return df.limit(cp.caps[0])
     names = [f"m{i}" for i in range(n)]
     # flags first, any-member OR filter second, structs LAST: Catalyst
     # pushes the OR into the scan and the wide struct projection runs on
@@ -641,18 +622,14 @@ def _collect_raw_chunk(folded: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
     room = [
         max(rq.state.size - len(rq.state.records), 0) for rq in cp.rqs
     ]
+    if n == 1:  # a lone member's limit job: plain rows
+        return [[r.asDict() for r in rows[: room[0]]]]
     for row in rows:
         i = row["member"]
         if len(result[i]) < room[i]:
             payload = row[f"m{i}"]
             result[i].append(payload.asDict() if payload is not None else {})
     return result
-
-
-def _run_raw_chunk(batch_df: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
-    """Execute one shared RAW pass (bind + collect in one call — the
-    uncached path)."""
-    return _collect_raw_chunk(_raw_chunk_folded_df(batch_df, cp), cp)
 
 
 @dataclass
@@ -681,12 +658,6 @@ def split_fleet(queries) -> tuple[list, list]:
     raw = [rq for rq in queries if isinstance(rq.state, RawState)]
     rest = [rq for rq in queries if not isinstance(rq.state, RawState)]
     return raw, rest
-
-
-def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
-    """Public name for the RAW fleet planner (the engine's split RAW
-    plan cache calls this directly on ``split_fleet``'s first half)."""
-    return _plan_raw_chunks(raw_queries)
 
 
 def plan_chunks(queries) -> list:
@@ -730,9 +701,9 @@ def shared_partials(
     """Compute every query's partial in one job per distinct key-set
     (chunked to MAX_MEMBERS_PER_JOB queries per plan). Chunk jobs execute
     concurrently — on low-partition batches a single job can't use the
-    cluster, so concurrency across jobs supplies the parallelism, exactly
-    like the per-query path. Pass ``chunks`` (from ``plan_chunks``, cached
-    across batches for a stable fleet) to skip plan construction. An
+    cluster, so concurrency across jobs supplies the parallelism. Pass
+    ``chunks`` (from ``plan_chunks``, cached across batches for a stable
+    fleet) to skip plan construction. An
     aggregation job is collected as one Arrow table and split per member
     by column selection (``split_members``); RAW and QUANTILE passes are
     collected as Rows.

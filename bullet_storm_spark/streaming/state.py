@@ -6,26 +6,25 @@ merges partials (/root/reference src/main/java/com/yahoo/bullet/storm/
 FilterBolt.java:187-189, JoinBolt.java:154-155; associativity proven by
 JoinBoltTest.java:696-735).
 
-Spark translation: the *partial* phase is a compiled DataFrame aggregation
-over each micro-batch (Catalyst's own partial+final machinery runs inside
-the batch, fully distributed); what crosses to the driver is one bounded
-partial-result table per query per batch — the same wire contract as the
-reference's sketch bytes. The *merge* phase runs on the driver, bounded
-by each aggregation's size cap exactly like Bullet's sketches bound their
-state. Aggregation partials reach the driver as Arrow tables: GROUP ALL /
-GROUP BY fold one in with one pyarrow hash aggregation per batch; the
-other families' partials are few rows, turned into row dicts and folded in
+Spark translation: the *partial* phase is the shared-scan planner's
+(streaming/multiquery.py) Spark jobs over each micro-batch, whether a query
+runs alone or in a fleet; what crosses to the driver is one bounded
+partial per query per batch — the same wire contract as the reference's
+sketch bytes. The *merge* phase runs on the driver, bounded by each
+aggregation's size cap exactly like Bullet's sketches bound their state.
+Aggregation partials reach the driver as Arrow tables: GROUP ALL / GROUP
+BY fold one in with one pyarrow hash aggregation per batch; the other
+families' partials are few rows, turned into row dicts and folded in
 Python. RAW and QUANTILE partials are collected as Rows.
 
 Each QueryState implements:
-  partial(df)  -> DataFrame   (batch -> bounded partial table, runs in Spark)
-  collect(p)   -> partial     (the partial on the driver, in merge()'s form)
   from_arrow(t)-> partial     (merge()'s form of a partial's Arrow table:
                                the table for GroupState, else row dicts)
   merge(rows)  -> None        (fold the partial into state, driver-side)
   result()     -> list[dict]  (current emission, reference output shape)
   reset()      -> None        (window close — Querier.reset analogue)
   is_full()    -> bool        (RAW early-termination contract)
+  consumed(p)  -> int         (records the partial's batch consumed)
 """
 
 from __future__ import annotations
@@ -35,11 +34,10 @@ from typing import Any
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from bullet_storm_spark.operators import top_k as top_k_op
 from bullet_storm_spark.operators.distribution import cdf_labels, pmf_labels
 from bullet_storm_spark.plans.query import (
     CountDistinct,
@@ -51,6 +49,11 @@ from bullet_storm_spark.plans.query import (
     Raw,
     TopK,
 )
+
+
+# the one NaN an exact COUNT DISTINCT keeps: a set finds an object by
+# identity first, and NaN never equals itself
+_NAN = float("nan")
 
 
 def arrow_rows(table: pa.Table) -> list[dict[str, Any]]:
@@ -82,20 +85,9 @@ def _pylist(col: pa.ChunkedArray) -> list:
     return [r[0] for r in rows]
 
 
-def _row_dicts(partial: DataFrame) -> list[dict[str, Any]]:
-    return [r.asDict() for r in partial.collect()]
-
-
 class QueryState:
-    def partial(self, df: DataFrame) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError
-
-    def collect(self, partial: DataFrame):
-        return self.from_arrow(partial.toArrow())
-
     def from_arrow(self, table: pa.Table):
-        # the one conversion of an aggregation partial, on the per-query and
-        # the shared-scan path alike
+        # the one conversion of an aggregation partial
         return arrow_rows(table)
 
     def merge(self, rows: list[dict[str, Any]]) -> None:  # pragma: no cover
@@ -124,13 +116,6 @@ class RawState(QueryState):
     def __init__(self, agg: Raw):
         self.size = agg.size
         self.records: list[dict[str, Any]] = []
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        # per-batch limit: never ship more than the remaining capacity
-        return df.limit(max(self.size - len(self.records), 0))
-
-    def collect(self, partial: DataFrame) -> list[dict[str, Any]]:
-        return _row_dicts(partial)
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         room = self.size - len(self.records)
@@ -178,27 +163,6 @@ class GroupState(QueryState):
         self.agg = agg
         self.key_aliases = [agg.alias_of(f) for f in agg.fields]
         self.groups: pa.Table | None = None
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        keys = [F.col(f).alias(self.agg.alias_of(f)) for f in self.agg.fields]
-        aggs = []
-        for i, op in enumerate(self.agg.operations):
-            f = F.col(op.field) if op.field else None
-            t = op.op
-            if t == GroupOpType.COUNT:
-                aggs.append(F.count(F.lit(1)).alias(f"__c{i}"))
-            elif t == GroupOpType.COUNT_FIELD:
-                aggs.append(F.count(f).alias(f"__c{i}"))
-            elif t in (GroupOpType.SUM, GroupOpType.AVG):
-                aggs.append(F.sum(f.cast("double")).alias(f"__s{i}"))
-                aggs.append(F.count(f).alias(f"__n{i}"))
-            elif t == GroupOpType.MIN:
-                aggs.append(F.min(f).alias(f"__m{i}"))
-            elif t == GroupOpType.MAX:
-                aggs.append(F.max(f).alias(f"__m{i}"))
-        # input-record count rides the same aggregation (consumed())
-        aggs.append(F.count(F.lit(1)).alias("__nrec"))
-        return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
     def from_arrow(self, table: pa.Table) -> pa.Table:
         return table
@@ -278,46 +242,19 @@ class CountDistinctState(QueryState):
         self.agg = agg
         self.keys: set = set()
         self.sketch: bytes | None = None
-        self._spark = None
 
-    def _key_col(self):
-        if len(self.agg.fields) == 1:
-            return F.col(self.agg.fields[0])
-        return F.concat_ws("\x1f", *[F.col(f).cast("string") for f in self.agg.fields])
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        self._spark = df.sparkSession
-        if self.agg.exact:
-            # groupBy instead of distinct: same shuffle shape, and the
-            # per-key counts sum to the batch record count (consumed())
-            return df.groupBy(self._key_col().alias("__k")).agg(
-                F.count(F.lit(1)).alias("__nrec")
-            )
-        return df.agg(
-            F.hll_sketch_agg(self._key_col()).alias("__sketch"),
-            F.count(F.lit(1)).alias("__nrec"),
-        )
-
-    def _session(self):
-        if self._spark is not None:
-            return self._spark
-        # shared-scan path never calls partial(); fall back to the active
-        # session for the tiny sketch-merge jobs
+    @staticmethod
+    def _session():
+        # the session for the tiny sketch-merge jobs
         from pyspark.sql import SparkSession
 
-        return SparkSession.getActiveSession()
+        return SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         if self.agg.exact:
-            if rows and "__ks" in rows[0]:
-                # shared-scan rows: one collect_set list per partial row
-                for r in rows:
-                    self.keys.update(r["__ks"] or [])
-                return
-            # COUNT DISTINCT never counts a NULL key (batch operator and
-            # both SQL dialects agree; multi-field concat keys are never
-            # null, matching too)
-            self.keys.update(r["__k"] for r in rows if r["__k"] is not None)
+            # one collect_set list per partial row (NULL keys never count)
+            for r in rows:
+                self.keys.update(_NAN if k != k else k for k in r["__ks"] or [])
             return
         for r in rows:
             new = r["__sketch"]
@@ -348,7 +285,7 @@ class CountDistinctState(QueryState):
         self.sketch = None
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        return sum(r.get("__nrec", 0) or 0 for r in rows)
+        return sum(r["__nrec"] or 0 for r in rows)
 
 
 class TopKState(QueryState):
@@ -368,15 +305,6 @@ class TopKState(QueryState):
             from bullet_storm_spark.operators.sketches import SpaceSavingSketch
 
             self.sketch = SpaceSavingSketch(agg.sketch_capacity)
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        keys = [
-            F.coalesce(F.col(f).cast("string"), F.lit(top_k_op.NULL_RENDERING)).alias(
-                self.agg.alias_of(f)
-            )
-            for f in self.agg.fields
-        ]
-        return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__c"))
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         for row in rows:
@@ -412,7 +340,7 @@ class TopKState(QueryState):
             self.sketch = SpaceSavingSketch(self.agg.sketch_capacity)
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        return sum(r.get("__c", 0) or 0 for r in rows)
+        return sum(r["__c"] or 0 for r in rows)
 
 
 class DistributionState(QueryState):
@@ -423,8 +351,9 @@ class DistributionState(QueryState):
     stream fits one compactor (<= SAMPLE_CAP values — the reference's own
     small-input exactness posture).
 
-    The partial job builds one summary PER PARTITION in Spark (Arrow
-    batches; self-contained closure) and ships levels — the sketch-bytes
+    The QUANTILE pass (multiquery._quantile_chunk_df) builds one summary
+    per member PER PARTITION in Spark (Arrow batches; self-contained
+    closures) and ships levels — the sketch-bytes
     wire contract. When the scan has more than TREE_FANIN partitions, a
     coalesce + merge stage unions summaries EXECUTOR-SIDE first, so
     driver traffic is O(TREE_FANIN x capacity) floats no matter how many
@@ -444,93 +373,6 @@ class DistributionState(QueryState):
         self.total = 0
         self.summary = KLLSummary(self.SAMPLE_CAP)
 
-    def partial(self, df: DataFrame) -> DataFrame:
-        v = F.col(self.agg.field).cast("double")
-        if self.agg.dist_type == DistributionType.QUANTILE:
-            cap = self.SAMPLE_CAP
-            schema = "__levels array<array<double>>, __n long, __nrec long"
-
-            # self-contained closures (cloudpickle ships them by value; no
-            # package import on workers) mirroring KLLSummary._compress
-            # deterministically; the accumulator is shared by the build
-            # and the tree-merge stages
-            def make_acc():
-                levels: list[list[float]] = [[]]
-                counter = [0]
-
-                def fold(in_levels):
-                    for i, lvl in enumerate(in_levels):
-                        while len(levels) <= i:
-                            levels.append([])
-                        levels[i].extend(float(x) for x in lvl)
-                    i = 0
-                    while i < len(levels):
-                        if len(levels[i]) > cap:
-                            lvl = sorted(levels[i])
-                            off = counter[0] & 1
-                            counter[0] += 1
-                            held = []
-                            if len(lvl) & 1:
-                                held = [lvl.pop()] if off else [lvl.pop(0)]
-                            if len(levels) <= i + 1:
-                                levels.append([])
-                            levels[i + 1].extend(lvl[off::2])
-                            levels[i] = held
-                        i += 1
-
-                return levels, fold
-
-            def build(batches):
-                import pandas as pd
-
-                levels, fold = make_acc()
-                nval = 0
-                nrec = 0
-                for pdf in batches:
-                    col = pdf["__v"]
-                    nrec += len(col)
-                    vals = col.dropna()
-                    nval += len(vals)
-                    fold([list(vals)])
-                yield pd.DataFrame(
-                    {"__levels": [levels], "__n": [nval], "__nrec": [nrec]}
-                )
-
-            def tree_merge(batches):
-                import pandas as pd
-
-                levels, fold = make_acc()
-                nval = 0
-                nrec = 0
-                for pdf in batches:
-                    for lv, nn, nr in zip(
-                        pdf["__levels"], pdf["__n"], pdf["__nrec"]
-                    ):
-                        fold(lv)
-                        nval += int(nn)
-                        nrec += int(nr)
-                yield pd.DataFrame(
-                    {"__levels": [levels], "__n": [nval], "__nrec": [nrec]}
-                )
-
-            out = df.select(v.alias("__v")).mapInPandas(build, schema)
-            if df.rdd.getNumPartitions() > self.TREE_FANIN:
-                out = out.coalesce(self.TREE_FANIN).mapInPandas(
-                    tree_merge, schema
-                )
-            return out
-        # null values land in a NULL bin (never binned/totaled, but they
-        # keep the batch record count riding this job for consumed())
-        bin_idx = F.lit(0)
-        for p in self.points:
-            bin_idx = bin_idx + (v >= F.lit(p)).cast("int")
-        return df.groupBy(bin_idx.alias("__bin")).agg(F.count(F.lit(1)).alias("__c"))
-
-    def collect(self, partial: DataFrame):
-        if self.agg.dist_type == DistributionType.QUANTILE:
-            return _row_dicts(partial)
-        return super().collect(partial)
-
     def merge(self, rows: list[dict[str, Any]]) -> None:
         if self.agg.dist_type == DistributionType.QUANTILE:
             from bullet_storm_spark.operators.sketches import KLLSummary
@@ -541,12 +383,13 @@ class DistributionState(QueryState):
                 )
             return
         if rows and "__bins" in rows[0]:
-            # shared-scan rows: one count per bin
+            # keyless-job rows: one count per bin
             for r in rows:
                 for b, c in enumerate(r["__bins"]):
                     self.bin_counts[b] += c
                     self.total += c
             return
+        # keyed-job rows (a spec longer than MAX_SHARED_BINS): one per bin
         for r in rows:
             if r["__bin"] is None:  # null-value bin: counted only by consumed()
                 continue
@@ -607,11 +450,7 @@ class DistributionState(QueryState):
         self.summary = KLLSummary(self.SAMPLE_CAP)
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        if self.agg.dist_type == DistributionType.QUANTILE:
-            return sum(r.get("__nrec", 0) or 0 for r in rows)
-        if rows and "__nrec" in rows[0]:  # shared-scan rows
-            return sum(r["__nrec"] or 0 for r in rows)
-        return sum(r.get("__c", 0) or 0 for r in rows)  # incl. the NULL bin
+        return sum(r["__nrec"] or 0 for r in rows)
 
 
 def make_state(query: Query) -> QueryState:

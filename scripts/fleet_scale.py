@@ -143,7 +143,6 @@ def main() -> None:
             spark,
             clock=frozen,
             enable_query_partitioner=enabled,
-            enable_shared_scan=False,
         )
         for i, b in enumerate(bqls):
             engine.submit(f"eq-{enabled}-{i}", parse(b))

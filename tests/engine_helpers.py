@@ -14,9 +14,9 @@ def frozen_engine(spark, **kwargs) -> StreamingEngine:
     return StreamingEngine(spark, clock=frozen_clock, **kwargs)
 
 
-def run_fleet(spark, queries: dict, batches, shared: bool = False) -> StreamingEngine:
+def run_fleet(spark, queries: dict, batches) -> StreamingEngine:
     """A frozen-clock engine that has run every batch over the fleet."""
-    engine = frozen_engine(spark, enable_shared_scan=shared)
+    engine = frozen_engine(spark)
     for qid, q in queries.items():
         engine.submit(qid, q)
     for b in batches:
@@ -26,3 +26,11 @@ def run_fleet(spark, queries: dict, batches, shared: bool = False) -> StreamingE
 
 def live_results(engine: StreamingEngine) -> dict:
     return {qid: rq.state.result() for qid, rq in engine.registry.queries.items()}
+
+
+def alone_results(spark, queries: dict, batches) -> dict:
+    """Each query's live result from an engine that ran it alone."""
+    return {
+        qid: live_results(run_fleet(spark, {qid: q}, batches))[qid]
+        for qid, q in queries.items()
+    }

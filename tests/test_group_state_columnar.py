@@ -1,7 +1,7 @@
 """GroupState's columnar merge: partials arrive as Arrow tables and fold in
 with one hash aggregation. The group cap, NaN keys and the Row-path value
-types (naive datetimes, Decimals, None) must hold on the per-query and the
-shared-scan path alike."""
+types (naive datetimes, Decimals, None) must hold for a query run alone and
+in a fleet alike."""
 
 import datetime
 from decimal import Decimal
@@ -17,7 +17,7 @@ from bullet_storm_spark import (
     Query,
 )
 from bullet_storm_spark.streaming.state import GroupState
-from engine_helpers import live_results, run_fleet
+from engine_helpers import alone_results, live_results, run_fleet
 
 
 def _op(t, field, alias):
@@ -75,9 +75,13 @@ def test_group_all_without_data_emits_one_row():
     assert state.result() == [{"cnt": 0, "s": None, "av": None, "mx": None}]
 
 
-def _run(spark, shared, queries, batches):
-    engine = run_fleet(spark, queries, batches, shared)
-    assert engine.shared_scan_queries == (len(queries) * len(batches) if shared else 0)
+def _run(spark, alone, queries, batches):
+    """Each query's live result, from one engine per query (``alone``) or
+    from one engine running the whole fleet."""
+    if alone:
+        return alone_results(spark, queries, batches)
+    engine = run_fleet(spark, queries, batches)
+    assert engine.shared_scan_queries == len(queries) * len(batches)
     return live_results(engine)
 
 
@@ -102,12 +106,12 @@ def test_nan_key_is_one_group_on_both_paths(spark):
             duration_ms=600_000,
         ),
     }
-    for shared in (False, True):
-        out = _run(spark, shared, queries, batches)
+    for alone in (True, False):
+        out = _run(spark, alone, queries, batches)
         groups = out["by_x"]
-        assert len(groups) == 2, (shared, groups)
+        assert len(groups) == 2, (alone, groups)
         (nan,) = [g for g in groups if g["x"] != g["x"]]
-        assert (nan["cnt"], nan["mx"]) == (6, 3.0), shared
+        assert (nan["cnt"], nan["mx"]) == (6, 3.0), alone
         assert [g for g in groups if g["x"] == 1.0] == [
             {"x": 1.0, "cnt": 3, "mx": 2.0}
         ]
@@ -134,7 +138,7 @@ def test_nan_values_order_like_sql_in_min_max(spark):
         ),
         duration_ms=600_000,
     )
-    (out,) = _run(spark, False, {"q": q}, batches).values()
+    (out,) = _run(spark, True, {"q": q}, batches).values()
     got = {r["k"]: (r["mn"], r["mx"]) for r in out}
     assert got["a"][0] == 1.0 and got["a"][1] != got["a"][1]
     assert got["b"][0] == 2.0 and got["b"][1] != got["b"][1]
@@ -193,10 +197,10 @@ def test_value_types_match_row_path(spark):
         return sorted(repr(r.asDict()) for r in out.collect())
 
     expected = {"by_ts": rows_path("ts", "when"), "by_dec": rows_path("dec", "dec")}
-    for shared in (False, True):
-        out = _run(spark, shared, queries, batches)
+    for alone in (True, False):
+        out = _run(spark, alone, queries, batches)
         got = {qid: sorted(map(repr, rows)) for qid, rows in out.items()}
-        assert got == expected, shared
+        assert got == expected, alone
         by_ts = {r["when"]: r for r in out["by_ts"]}
         assert set(by_ts) == {ts[0], ts[1], None}
         assert all(k is None or k.tzinfo is None for k in by_ts)
@@ -210,7 +214,8 @@ def test_value_types_match_row_path(spark):
 
 def test_binary_values_match_row_path(spark):
     # binary keys and MIN/MAX over binary render as collect() gives them
-    # (bytes), and an exact COUNT DISTINCT can hash them on both paths
+    # (bytes), and an exact COUNT DISTINCT can hash them, alone and in a
+    # fleet
     schema = "b binary, v double"
     batches = [
         spark.createDataFrame([(b"ab", 1.0), (b"cd", 2.0), (None, 3.0)], schema),
@@ -240,7 +245,7 @@ def test_binary_values_match_row_path(spark):
         .agg(F.count(F.lit(1)).alias("cnt"), F.max("b").alias("mx"))
         .collect()
     )
-    for shared in (False, True):
-        out = _run(spark, shared, queries, batches)
-        assert sorted(map(repr, out["by_b"])) == expected, shared
-        assert out["cd_b"] == [{"u": 3}], shared
+    for alone in (True, False):
+        out = _run(spark, alone, queries, batches)
+        assert sorted(map(repr, out["by_b"])) == expected, alone
+        assert out["cd_b"] == [{"u": 3}], alone

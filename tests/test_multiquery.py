@@ -1,9 +1,13 @@
-"""Shared-scan multi-query evaluation: one job per distinct grouping column
-set must produce exactly the same per-query state as the per-query path."""
+"""Shared-scan multi-query evaluation: every query, alone or in a fleet, is
+planned and computed by the shared-scan planner. Two independent checks pin
+it: a query run alone in its own engine gives the same result as in a fleet
+(fleet isolation), and the batch path (``compile_query`` over the union of
+the batches, the path the DuckDB oracle gates) agrees with the engine."""
 
 import pytest
 
 from bullet_storm_spark import (
+    compile_query,
     CountDistinct,
     Distribution,
     DistributionType,
@@ -18,7 +22,7 @@ from bullet_storm_spark import (
 )
 from bullet_storm_spark.plans.expressions import eq, fld, gt
 from bullet_storm_spark.streaming import QueryRegistry
-from engine_helpers import frozen_engine, live_results, run_fleet
+from engine_helpers import alone_results, frozen_engine, live_results, run_fleet
 
 
 def _mixed_queries():
@@ -145,41 +149,92 @@ def batches(spark):
     )
 
 
-def _run(spark, batches, shared: bool):
-    engine = run_fleet(spark, _mixed_queries(), batches, shared)
-    outcomes = {
-        qid: _outcome(rq) for qid, rq in engine.registry.queries.items()
-    }
-    return outcomes, engine
+def _outcomes(engine):
+    return {qid: _outcome(rq) for qid, rq in engine.registry.queries.items()}
 
 
 def _outcome(rq):
     return sorted(map(str, rq.state.result())), rq.records_consumed
 
 
+def _alone_outcomes(spark, queries, batches):
+    """Each query's outcome from an engine that ran it alone."""
+    return {
+        qid: _outcomes(run_fleet(spark, {qid: q}, batches))[qid]
+        for qid, q in queries.items()
+    }
+
+
+def _norm(rows):
+    # numbers as rounded floats: the engine sums in double, the batch path
+    # in the column's type
+    def num(v):
+        if isinstance(v, (int, float)) and not isinstance(v, bool):
+            return round(float(v), 6)
+        return v
+
+    return sorted(str({k: num(v) for k, v in r.items()}) for r in rows)
+
+
+def _batch_reference(query, batches):
+    """The batch path's result over the union of the batches."""
+    union = batches[0]
+    for b in batches[1:]:
+        union = union.unionByName(b)
+    return _norm(r.asDict() for r in compile_query(query)(union).collect())
+
+
+def _has_batch_reference(query):
+    # exact families only: sketches and KLL summaries estimate, and RAW
+    # rows depend on scan order
+    agg = query.aggregation
+    if isinstance(agg, Raw):
+        return False
+    if isinstance(agg, TopK):
+        return agg.sketch_capacity is None
+    if isinstance(agg, CountDistinct):
+        return agg.exact
+    if isinstance(agg, Distribution):
+        return agg.dist_type != DistributionType.QUANTILE
+    return True
+
+
 def test_shared_scan_equals_per_query(spark, batches):
-    base, _ = _run(spark, batches, shared=False)
-    shared, engine = _run(spark, batches, shared=True)
-    n = len(_mixed_queries())
-    # every query is shareable, on both batches
-    assert engine.shared_scan_queries == 2 * n
-    assert base.keys() == shared.keys()
-    for qid in base:
-        assert base[qid] == shared[qid], qid
+    # every query in the fleet reports what it reports alone, results AND
+    # records_consumed, and the exact families match the batch path
+    queries = _mixed_queries()
+    engine = run_fleet(spark, queries, batches)
+    assert engine.shared_scan_queries == 2 * len(queries)
+    fleet = _outcomes(engine)
+    assert fleet == _alone_outcomes(spark, queries, batches)
+    live = live_results(engine)
+    checked = [qid for qid, q in queries.items() if _has_batch_reference(q)]
+    assert len(checked) == 10
+    for qid in checked:
+        assert _norm(live[qid]) == _batch_reference(queries[qid], batches), qid
 
 
-def test_shared_scan_single_query_falls_back(spark, batches):
-    engine = frozen_engine(spark, enable_shared_scan=True)
-    engine.submit("only", _mixed_queries()["grp_by"])
+def test_lone_query_is_a_fleet_of_one(spark, batches):
+    # a lone query runs on the shared-scan path and its plan is cached
+    # like a fleet's
+    q = _mixed_queries()["grp_by"]
+    engine = frozen_engine(spark)
+    engine.submit("only", q)
     engine.process_batch(batches[0])
-    assert engine.shared_scan_queries == 0  # <2 shareable -> per-query path
-    assert engine.registry.queries["only"].state.result()
+    assert engine.shared_scan_queries == 1
+    key = engine._chunk_cache_key
+    assert key is not None and len(engine._chunk_cache) == 1
+    engine.process_batch(batches[1])
+    assert engine.shared_scan_queries == 2
+    assert engine._chunk_cache_key == key
+    result = engine.registry.queries["only"].state.result()
+    assert _norm(result) == _batch_reference(q, batches)
 
 
 def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
     # the ChunkPlan cache must rebuild when a member leaves the fleet
-    # (killed query) and keep producing per-query-identical results
-    engine = frozen_engine(spark, enable_shared_scan=True)
+    # (killed query) and keep producing what each query reports alone
+    engine = frozen_engine(spark)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
@@ -191,27 +246,34 @@ def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
     engine.process_batch(batches[1])
     key2 = engine._chunk_cache_key
     assert key2 is not None and key2 != key1
-    # survivors still aggregate both batches correctly vs per-query path
-    base, _ = _run(spark, [batches[0], batches[0], batches[1]], shared=False)
-    for qid, rq in engine.registry.queries.items():
-        if qid == "grp_all":
-            continue
-        assert _outcome(rq) == base[qid], qid
+    # survivors still aggregate all three batches as each does alone
+    survivors = {k: v for k, v in _mixed_queries().items() if k != "grp_all"}
+    base = _alone_outcomes(
+        spark, survivors, [batches[0], batches[0], batches[1]]
+    )
+    assert _outcomes(engine) == base
 
 
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
-    # killing the fleet below the shareable threshold must drop the
-    # cached ChunkPlans (they hold the retired queries' state)
-    engine = frozen_engine(spark, enable_shared_scan=True)
+    # the cached plans hold their members' state: a fleet that shrinks to
+    # one RAW query must re-plan without the retired members, and an
+    # engine with no query left must drop the plans
+    engine = frozen_engine(spark)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
-    assert engine._chunk_cache is not None
+    assert engine._chunk_cache
     for qid in list(engine.registry.queries):
         if qid != "raw":
             engine.kill(qid)
     engine.process_batch(batches[1])
-    assert engine._chunk_cache is None and engine._chunk_cache_key is None
+    assert engine._chunk_cache == [] and engine._chunk_cache_key == ()
+    (raw_plan,) = engine._raw_chunk_cache
+    assert [rq.id for rq in raw_plan.rqs] == ["raw"]
+    engine.kill("raw")
+    engine.process_batch(batches[1])
+    assert engine._chunk_cache is None and engine._raw_chunk_cache is None
+    assert engine._bound_cache == {}
 
 
 def _raw_fleet(n: int, size: int = 5, off: int = 0):
@@ -234,7 +296,7 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
     # A RAW fleet on the shared path must keep the per-query contracts:
     # each query collects EXACTLY its limit of rows matching ITS filter
     # (projected per ITS projection) and early-COMPLETEs when full.
-    engine = frozen_engine(spark, enable_shared_scan=True)
+    engine = frozen_engine(spark)
     for qid, q in _raw_fleet(6).items():
         engine.submit(qid, q)
     emitted = {}
@@ -256,21 +318,23 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
 
 def test_shared_raw_fleet_equals_per_query_counts(spark, batches):
     # remaining-capacity decay across batches: a fleet too selective to
-    # fill on batch 0 keeps accumulating on batch 1, and totals equal the
-    # per-query path's exactly (content equality is order-dependent for
-    # RAW; counts and filter-consistency are the contract). filter n>20+i:
-    # batch 0 supplies 59-i matches, batch 1 another 19-i — never full at
-    # size 90, so the fleet stays live and shares BOTH batches
-    def run(shared):
-        engine = run_fleet(spark, _raw_fleet(4, size=90, off=20), batches, shared)
-        return live_results(engine), engine
-
-    base, _ = run(False)
-    got, engine = run(True)
-    assert engine.shared_scan_queries >= 8
-    assert base.keys() == got.keys()
-    for qid in base:
-        assert len(got[qid]) == len(base[qid]), qid
+    # fill on batch 0 keeps accumulating on batch 1. filter n>20+i: batch
+    # 0 supplies 59-i matches, batch 1 another 19-i — never full at size
+    # 90, so the fleet stays live and shares BOTH batches. A lone RAW
+    # query is a limit job, not the shared pass: both must ship every
+    # match (content is order-dependent for RAW; counts and the filter
+    # are the contract)
+    queries = _raw_fleet(4, size=90, off=20)
+    engine = run_fleet(spark, queries, batches)
+    assert engine.shared_scan_queries == 8
+    got = live_results(engine)
+    assert got.keys() == queries.keys()
+    for i, res in enumerate((got, alone_results(spark, queries, batches))):
+        for j in range(4):
+            rows = res[f"raw{j}"]
+            assert len(rows) == 78 - 2 * j, (i, j)
+            key = "num" if j % 2 else "n"
+            assert all(r[key] > 20 + j for r in rows), (i, j)
 
 
 def test_raw_fleet_is_one_chunk_plan():
@@ -299,8 +363,9 @@ def test_raw_fleet_is_one_chunk_plan():
 
 def test_shared_quantile_fleet_equals_per_query(spark, batches):
     # QUANTILE fleet on the shared KLL pass: small input (< SAMPLE_CAP)
-    # is EXACT on both paths, so results must be identical; the fleet
-    # plans into one QuantileChunkPlan and runs one job per batch.
+    # is EXACT, so each query reports alone what it reports in the fleet,
+    # and both are the interpolated quantiles of its matching values; the
+    # fleet plans into one QuantileChunkPlan and runs one job per batch.
     from bullet_storm_spark.streaming.multiquery import (
         QuantileChunkPlan,
         plan_chunks,
@@ -321,14 +386,24 @@ def test_shared_quantile_fleet_equals_per_query(spark, batches):
             for i in range(5)
         }
 
-    def run(shared):
-        engine = run_fleet(spark, fleet(), batches, shared)
-        return live_results(engine), engine
-
-    base, _ = run(False)
-    got, engine = run(True)
+    engine = run_fleet(spark, fleet(), batches)
     assert engine.shared_scan_queries == 10
-    assert base == got
+    got = live_results(engine)
+    assert got == alone_results(spark, fleet(), batches)
+    rows = [r for b in batches for r in b.collect()]
+    for i in range(5):
+        vals = sorted(
+            r["v"]
+            for r in rows
+            if (i == 0 or r["n"] > 10 * i) and r["v"] is not None
+        )
+        expected = []
+        for p in (0.1, 0.5, 0.9):
+            t = p * (len(vals) - 1)
+            lo, hi = int(t), min(int(t) + 1, len(vals) - 1)
+            expected.append(vals[lo] * (1 - (t - lo)) + vals[hi] * (t - lo))
+        values = [r["value"] for r in got[f"qt{i}"]]
+        assert values == pytest.approx(expected), i
 
     class _RQ:
         def __init__(self, q):
@@ -343,11 +418,11 @@ def test_shared_quantile_fleet_equals_per_query(spark, batches):
 @pytest.mark.parametrize("seed", range(4))
 def test_shared_scan_random_fleet_equivalence(spark, seed):
     # seeded random mixed fleets (every family incl. RAW + QUANTILE,
-    # random filters/projections/limits/points) must produce per-query
-    # states IDENTICAL to the per-query path across two batches — the
-    # property version of the fixed-fleet tests above. RAW content is
-    # order-dependent by contract, so RAW compares count + filter
-    # consistency; everything else compares exactly.
+    # random filters/projections/limits/points): each query must report
+    # in the fleet exactly what it reports alone across two batches, and
+    # the exact families must match the batch path — the property version
+    # of the fixed-fleet tests above. RAW content is order-dependent by
+    # contract, so RAW compares counts; everything else compares exactly.
     import random as _random
 
     from bullet_storm_spark.plans.expressions import lt
@@ -433,33 +508,33 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
 
     fleet = {f"rf{seed}-{i}": rand_query(i) for i in range(rng.randint(6, 14))}
 
-    def run(shared):
-        engine = run_fleet(spark, fleet, batches, shared)
+    def run(queries):
+        engine = run_fleet(spark, queries, batches)
         done = {}
         for qid, clip in engine.results:
             done.setdefault(qid, clip)
-        live = live_results(engine)
-        consumed = {
-            qid: rq.records_consumed
-            for qid, rq in engine.registry.queries.items()
-        }
-        return live, done, consumed
+        out = {}
+        for qid in queries:
+            rq = engine.registry.queries.get(qid)
+            if rq is None:  # a RAW query that filled: its final Clip
+                out[qid] = (done[qid].meta.get("signal"), done[qid].records, None)
+            else:
+                out[qid] = (None, rq.state.result(), rq.records_consumed)
+        return out
 
-    base_live, base_done, base_consumed = run(False)
-    got_live, got_done, got_consumed = run(True)
-    assert base_live.keys() == got_live.keys()
-    assert base_done.keys() == got_done.keys()
-    assert base_consumed == got_consumed
-    for qid in fleet:
-        q = fleet[qid]
-        b = base_live.get(qid, base_done[qid].records if qid in base_done else None)
-        g = got_live.get(qid, got_done[qid].records if qid in got_done else None)
+    got = run(fleet)
+    alone = {}
+    for qid, q in fleet.items():
+        alone.update(run({qid: q}))
+    for qid, q in fleet.items():
+        (g_sig, g, g_consumed), (a_sig, a, a_consumed) = got[qid], alone[qid]
+        assert (g_sig, g_consumed) == (a_sig, a_consumed), qid
         if isinstance(q.aggregation, Raw):
-            assert len(b) == len(g), qid
-            if q.filter is not None:
-                col = q.filter.to_column()  # noqa: F841 (structural check only)
+            assert len(g) == len(a), qid
         else:
-            assert sorted(map(str, b)) == sorted(map(str, g)), qid
+            assert sorted(map(str, g)) == sorted(map(str, a)), qid
+        if _has_batch_reference(q):
+            assert _norm(g) == _batch_reference(q, batches), qid
 
 
 def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
@@ -472,8 +547,8 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
     # matching its filter.
     from bullet_storm_spark.streaming.multiquery import (
         RAW_FOLD_FANIN,
+        _collect_raw_chunk,
         _raw_chunk_folded_df,
-        _run_raw_chunk,
         plan_raw_chunks,
     )
     from bullet_storm_spark.streaming.state import RawState
@@ -492,11 +567,11 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
     fleet = [_RQ(q) for q in _raw_fleet(8, size=7).values()]
     (cp,) = plan_raw_chunks(fleet)
     caps_total = sum(cp.caps)
-    folded_rows = _raw_chunk_folded_df(batch, cp).count()
+    folded = _raw_chunk_folded_df(batch, cp)
     # the bound that matters: independent of the 128 partitions
-    assert folded_rows <= RAW_FOLD_FANIN * caps_total
+    assert folded.count() <= RAW_FOLD_FANIN * caps_total
     # and the per-member contract is intact through the fold
-    result = _run_raw_chunk(batch, cp)
+    result = _collect_raw_chunk(folded, cp)
     for i, member_rows in enumerate(result):
         assert len(member_rows) == 7, i
         key = "num" if i % 2 else "n"
@@ -603,7 +678,7 @@ def test_batch_jobs_and_single_reader_skips_persist(
         lambda self, *a, **k: calls.append(1) or real_persist(self, *a, **k),
     )
     q = _mixed_queries()
-    engine = frozen_engine(spark, enable_shared_scan=True)
+    engine = frozen_engine(spark)
     engine.submit("grp_all", q["grp_all"])
     engine.submit("pmf", q["pmf"])
     engine.submit("cd", q["cd"])
@@ -615,3 +690,46 @@ def test_batch_jobs_and_single_reader_skips_persist(
     engine.process_batch(batches[1])
     assert engine.stats()["batch_jobs"] == 2
     assert len(calls) == 1
+
+
+def test_topk_negative_zero_reports_under_zero(spark):
+    # Spark normalizes -0.0 to 0.0 in grouping keys, so a TOP K over a
+    # double field reports -0.0 rows under "0.0", alone and in a fleet
+    rows = [(-0.0,), (0.0,), (1.0,), (-0.0,)]
+    batches = [spark.createDataFrame(rows, "x double")]
+    queries = {
+        "topk": Query(
+            aggregation=TopK(size=5, name="cnt", fields={"x": ""}),
+            duration_ms=600_000,
+        ),
+        "grp": Query(
+            aggregation=GroupBy(
+                fields={"x": ""},
+                operations=[GroupOperation(GroupOpType.COUNT, None, "cnt")],
+            ),
+            duration_ms=600_000,
+        ),
+    }
+    expected = [{"x": "0.0", "cnt": 3}, {"x": "1.0", "cnt": 1}]
+    assert alone_results(spark, {"topk": queries["topk"]}, batches)["topk"] == expected
+    assert live_results(run_fleet(spark, queries, batches))["topk"] == expected
+
+
+def test_exact_count_distinct_counts_nan_once(spark):
+    # NaN never equals itself: each batch's NaN key must still be the one
+    # NaN already counted, alone and in a fleet
+    batches = [
+        spark.createDataFrame([(float("nan"),), (1.0,)], "x double")
+        for _ in range(3)
+    ]
+    queries = {
+        "cd": Query(
+            aggregation=CountDistinct(fields=["x"], name="u"), duration_ms=600_000
+        ),
+        "grp": Query(
+            aggregation=GroupAll(GroupOperation(GroupOpType.COUNT, None, "cnt")),
+            duration_ms=600_000,
+        ),
+    }
+    assert alone_results(spark, {"cd": queries["cd"]}, batches)["cd"] == [{"u": 2}]
+    assert live_results(run_fleet(spark, queries, batches))["cd"] == [{"u": 2}]

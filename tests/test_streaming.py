@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from bullet_storm_spark import (
     CountDistinct,
+    GroupAll,
     GroupBy,
     GroupOperation,
     GroupOpType,
@@ -173,6 +174,65 @@ def test_sliding_record_window(spark, engine, clock):
     windows = [c for i, c in engine.results if i == "r1"]
     assert len(windows) == 2  # 5 matching records -> 2 full windows of 2
     assert all(len(w.records) == 2 for w in windows)
+
+
+def test_record_windows_alone_and_in_fleet(spark):
+    # record windows run on the one partial path: an aggregate and a RAW
+    # record window emit the same Clips alone as in a fleet beside a plain
+    # GROUP BY (and a second RAW query, so the fleet's RAW members share
+    # the pass while a lone one is a limit job)
+    from engine_helpers import frozen_engine
+
+    count = GroupOperation(GroupOpType.COUNT, None, "cnt")
+    windowed = {
+        # every record counts: 3 per batch, a window per 2 consumed
+        "agg_w": Query(
+            aggregation=GroupAll(count),
+            window=SlidingRecordWindow(emit_every=2),
+            duration_ms=60_000,
+        ),
+        "raw_w": Query(
+            filter=eq("field", "x"),
+            aggregation=Raw(size=100),
+            window=SlidingRecordWindow(emit_every=2),
+            duration_ms=60_000,
+        ),
+    }
+    others = {
+        "grp": Query(
+            aggregation=GroupBy(fields={"field": ""}, operations=[count]),
+            duration_ms=60_000,
+        ),
+        "raw": Query(aggregation=Raw(size=100), duration_ms=60_000),
+    }
+    batches = [
+        batch(spark, [("x", 1.0), ("y", 0.0), ("x", 2.0)]),
+        batch(spark, [("x", 3.0), ("x", 4.0), ("x", 5.0)]),
+    ]
+    expected = {
+        # batch 2 crosses two boundaries: the second window is empty
+        "agg_w": [([{"cnt": 3}], 1), ([{"cnt": 3}], 2), ([{"cnt": 0}], 3)],
+        "raw_w": [
+            ([{"field": "x", "v": 1.0}, {"field": "x", "v": 2.0}], 1),
+            ([{"field": "x", "v": 3.0}, {"field": "x", "v": 4.0}], 2),
+        ],
+    }
+    consumed = {"agg_w": 6, "raw_w": 5}
+    for qid, q in windowed.items():
+        for fleet in ({qid: q}, {qid: q, **others}):
+            engine = frozen_engine(spark)
+            for fid, fq in fleet.items():
+                engine.submit(fid, fq)
+            for b in batches:
+                engine.process_batch(b)
+            clips = [
+                (c.records, c.meta[WINDOW_NUMBER_KEY])
+                for i, c in engine.results
+                if i == qid
+            ]
+            assert clips == expected[qid], (qid, len(fleet))
+            rq = engine.registry.queries[qid]
+            assert rq.records_consumed == consumed[qid], (qid, len(fleet))
 
 
 def test_kill_signal(spark, engine, clock):

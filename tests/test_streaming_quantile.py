@@ -51,24 +51,36 @@ def test_tree_merge_bounds_driver_traffic(spark, monkeypatch):
     partition to the driver: the coalesce+merge stage caps the partial
     frame at TREE_FANIN rows, and (exact regime) the merged result is
     identical to the unmerged path's."""
-    monkeypatch.setattr(DistributionState, "TREE_FANIN", 4)
-    state = DistributionState(
-        Distribution(field="v", dist_type=DistributionType.QUANTILE, points=[0.5])
+    from bullet_storm_spark.streaming.multiquery import (
+        _collect_quantile_chunk,
+        _quantile_chunk_df,
+        plan_chunks,
     )
+
+    monkeypatch.setattr(DistributionState, "TREE_FANIN", 4)
+
+    class _RQ:  # minimal RunningQuery stand-in: .query + .state + .id
+        def __init__(self):
+            self.query = _quantile_query([0.5])
+            self.state = DistributionState(self.query.aggregation)
+            self.id = id(self)
+
+    def merged(frame):
+        rq = _RQ()
+        (cp,) = plan_chunks([rq])  # a one-member QUANTILE plan
+        part = _quantile_chunk_df(frame, cp)
+        (rows,) = _collect_quantile_chunk(part, cp)
+        rq.state.merge(rows)
+        return rq.state, rows
+
     df = spark.createDataFrame(
         [(float(i),) for i in range(400)], "v double"
     ).repartition(64)
-    part = state.partial(df)
-    rows = [r.asDict() for r in part.collect()]
+    state, rows = merged(df)
     assert len(rows) <= 4, "driver received more than TREE_FANIN summaries"
     assert sum(r["__n"] for r in rows) == 400
-    state.merge(rows)
     # exact regime: same quantile as a no-tree (few-partition) run
-    flat_state = DistributionState(
-        Distribution(field="v", dist_type=DistributionType.QUANTILE, points=[0.5])
-    )
-    flat = [r.asDict() for r in flat_state.partial(df.coalesce(2)).collect()]
-    flat_state.merge(flat)
+    flat_state, _ = merged(df.coalesce(2))
     assert state.summary.is_exact() and flat_state.summary.is_exact()
     assert state.result() == flat_state.result()
 
