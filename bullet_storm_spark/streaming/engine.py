@@ -25,11 +25,13 @@ The batch work stays fully distributed (Catalyst plans every query's
 filter+partial-agg over the batch); only bounded partial tables reach the
 driver — the same wire discipline as FilterBolt->JoinBolt sketch bytes.
 The shared-scan planner (streaming/multiquery.py) folds every aggregation
-family into one job per distinct grouping column set, RAW fleets into one
-mapInPandas pass per 64 members, and QUANTILE fleets into one KLL-partial
-pass per 16; the query-predicate partitioner (streaming/partitioner.py)
-prunes provably-non-matching queries before any job runs. The batch is
-persisted when more than one job reads it.
+family into one job per distinct grouping column set, RAW fleets of up to
+multiquery.RAW_LIMIT_JOBS_MAX members into one concurrent limit job per
+member and larger RAW fleets into one mapInPandas pass per 64 members, and
+QUANTILE fleets into one KLL-partial pass per 16; the query-predicate
+partitioner (streaming/partitioner.py) prunes provably-non-matching
+queries before any job runs. The batch is persisted when more than one job
+reads it.
 """
 
 from __future__ import annotations
@@ -453,11 +455,7 @@ class StreamingEngine:
     def _shared_chunks(self, fleet: list) -> list:
         """The fleet's chunk plans (RAW passes first), from the plan caches;
         a cache rebuilds only when its half of the fleet changed."""
-        from bullet_storm_spark.streaming.multiquery import (
-            plan_chunks,
-            plan_raw_chunks,
-            split_fleet,
-        )
+        from bullet_storm_spark.streaming.multiquery import plan_chunks, split_fleet
 
         # the one split definition (multiquery.split_fleet) keys BOTH
         # caches, so the cache layout can't drift from the planner's own
@@ -469,29 +467,42 @@ class StreamingEngine:
             self._chunk_cache_key = key
         raw_key = tuple((rq.id, id(rq)) for rq in raw_fleet)
         if raw_key != self._raw_chunk_cache_key:
-            # RAW members fill and COMPLETE by design, often a few per
-            # batch — rebuilding the plan (and its bound frame) on every
-            # completion kept the bench fleet in permanent plan churn
-            # (~0.8 s/batch, r12). A fleet that only SHRANK keeps the
-            # cached plan: completed members' rows are skipped at collect
-            # time (room = 0) and ignored by the active-query merge, so
-            # results are identical. Rebuild on NEW members, or once live
-            # members drop below half the plan (dead flag columns still
-            # evaluate JVM-side — bounded waste).
-            cached_ids = {
-                (rq.id, id(rq))
-                for cp in (self._raw_chunk_cache or [])
-                for rq in cp.rqs
-            }
-            live = set(raw_key)
-            if (
-                self._raw_chunk_cache is None
-                or not live <= cached_ids
-                or len(live) * 2 < len(cached_ids)
-            ):
-                self._raw_chunk_cache = plan_raw_chunks(raw_fleet)
+            self._raw_chunk_cache = self._raw_plans(raw_fleet)
             self._raw_chunk_cache_key = raw_key
         return self._raw_chunk_cache + self._chunk_cache
+
+    def _raw_plans(self, raw_fleet: list) -> list:
+        """The RAW plans for a changed RAW fleet, reusing what still fits.
+        RAW members fill and COMPLETE by design, often a few per batch, so
+        re-planning every survivor on each change kept the bench fleet in
+        permanent plan churn (~0.8 s/batch, r12)."""
+        from bullet_storm_spark.streaming.multiquery import (
+            RAW_LIMIT_JOBS_MAX,
+            plan_raw_chunks,
+        )
+
+        cached = self._raw_chunk_cache or []
+        if len(raw_fleet) <= RAW_LIMIT_JOBS_MAX:
+            # one limit job per member: survivors keep their plans, a new
+            # member plans only itself, and a finished member's plan is
+            # dropped (kept, its limit job would still run with room 0)
+            own = {id(cp.rqs[0]): cp for cp in cached if len(cp.rqs) == 1}
+            fresh = iter(
+                plan_raw_chunks([rq for rq in raw_fleet if id(rq) not in own])
+            )
+            return [own.get(id(rq)) or next(fresh) for rq in raw_fleet]
+        # a pass fleet that only SHRANK keeps its cached passes: completed
+        # members' rows are skipped at collect time (room = 0) and ignored
+        # by the active-query merge, so results are identical. Re-plan on
+        # NEW members, or once live members drop below half the plan (dead
+        # flag columns still evaluate JVM-side — bounded waste). A one-member
+        # tail chunk whose member finished is a limit job: dropped, as above.
+        live = {id(rq) for rq in raw_fleet}
+        cached = [cp for cp in cached if len(cp.rqs) > 1 or id(cp.rqs[0]) in live]
+        cached_ids = {id(rq) for cp in cached for rq in cp.rqs}
+        if cached and live <= cached_ids and len(live) * 2 >= len(cached_ids):
+            return cached
+        return plan_raw_chunks(raw_fleet)
 
     def stats(self) -> dict[str, Any]:
         """Engine statistics — the FilterBolt periodic stats report

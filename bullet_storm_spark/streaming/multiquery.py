@@ -39,10 +39,13 @@ fan-out (SURVEY.md §4 row 1 / §7.3 known-hard #1) as Catalyst plans.
 Aggregation jobs: GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT,
 DISTRIBUTION PMF/CDF — anything whose partial is a (possibly keyless) hash
 aggregation; the per-member match count doubles as the record-consumption
-metric. RAW fleets (the reference's most common query shape,
-``T/JoinBoltTest.java:340-351`` makeRawQuery) share ONE mapInPandas pass
-per <=MAX_RAW_MEMBERS_PER_JOB members: every member's filter and
-projection evaluate JVM-side into a nullable struct column,
+metric. RAW queries (the reference's most common query shape,
+``T/JoinBoltTest.java:340-351`` makeRawQuery) in a fleet of at most
+RAW_LIMIT_JOBS_MAX members each run as a plain ``where -> select ->
+limit`` job, concurrently on the shared_partials pool: no Python stage,
+and the limit stops the scan once met. Larger RAW fleets share ONE
+mapInPandas pass per <=MAX_RAW_MEMBERS_PER_JOB members: every member's
+filter and projection evaluate JVM-side into a nullable struct column,
 rows matching no member are dropped JVM-side, and the Python stage only
 caps each member at its limit per partition; past RAW_FOLD_FANIN scan
 partitions one coalesce + re-cap fold level bounds the driver collect
@@ -50,9 +53,9 @@ at O(RAW_FOLD_FANIN x sum(limits)) rows at ANY partition count (the
 sketch tree-fold discipline — without it a 100k-partition batch could
 funnel partitions x sum(limits) rows to the driver). The
 member's CURRENT remaining capacity is applied driver-side at split
-time so the cached batch-independent plan survives capacity decay. A
-lone RAW query skips the pass: it is a ``where -> select -> limit`` job,
-which stops scanning once the limit is met. QUANTILE fleets likewise
+time so the cached batch-independent plan survives capacity decay (a
+pass chunk left with one member binds as that member's limit job).
+QUANTILE fleets likewise
 share one mapInPandas pass per <=MAX_QUANTILE_MEMBERS_PER_JOB members,
 each member folding its filtered values into its own mergeable KLL
 summary. Window emission (record windows included) is per query and runs
@@ -269,6 +272,15 @@ MAX_SHARED_BINS = 16
 # the cap is looser; it bounds the Arrow row width of the Python stage
 MAX_RAW_MEMBERS_PER_JOB = 64
 
+# RAW fleets of at most this many members run one limit job per member,
+# concurrently on the shared_partials pool, instead of the shared pass: a
+# limit job stays on the JVM and stops scanning once full, while the pass
+# pays an Arrow round trip and a Python worker. In the fleet_scale.py RAW
+# crossover sweep (2k-row slices, local[4]) the limit jobs win at every
+# size for a fresh fleet and up to 16 members for a plan-cached one, by
+# 29% or more up to 12 (SCALING.md)
+RAW_LIMIT_JOBS_MAX = 12
+
 
 @dataclass
 class RawChunkPlan:
@@ -306,37 +318,45 @@ class RawChunkPlan:
 
 def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
     """The RAW fleet planner (the engine's split RAW plan cache calls this
-    directly on ``split_fleet``'s first half)."""
-    chunks: list[RawChunkPlan] = []
-    for start in range(0, len(raw_queries), MAX_RAW_MEMBERS_PER_JOB):
-        members = raw_queries[start : start + MAX_RAW_MEMBERS_PER_JOB]
-        caps = [rq.state.size for rq in members]
-        flag_cols, payload_cols = [], []
-        # a lone member needs no pass columns: it binds straight from its
-        # query (_raw_chunk_folded_df)
-        for i, rq in enumerate(members if len(members) > 1 else ()):
-            q = rq.query
-            fcol = (
-                F.coalesce(q.filter.to_column(), F.lit(False))
-                if q.filter is not None
-                else F.lit(True)
+    directly on ``split_fleet``'s first half): one one-member plan per
+    query up to RAW_LIMIT_JOBS_MAX members, shared passes of
+    MAX_RAW_MEMBERS_PER_JOB members above it."""
+    if len(raw_queries) <= RAW_LIMIT_JOBS_MAX:
+        return [raw_chunk_plan([rq]) for rq in raw_queries]
+    return [
+        raw_chunk_plan(raw_queries[start : start + MAX_RAW_MEMBERS_PER_JOB])
+        for start in range(0, len(raw_queries), MAX_RAW_MEMBERS_PER_JOB)
+    ]
+
+
+def raw_chunk_plan(members) -> RawChunkPlan:
+    """One RAW job's plan: a shared pass over two or more members, or a
+    lone member's limit job, which needs no pass columns (it binds
+    straight from its query in ``_raw_chunk_folded_df``)."""
+    flag_cols, payload_cols = [], []
+    for i, rq in enumerate(members if len(members) > 1 else ()):
+        q = rq.query
+        fcol = (
+            F.coalesce(q.filter.to_column(), F.lit(False))
+            if q.filter is not None
+            else F.lit(True)
+        )
+        if q.projection.fields is not None:
+            payload = F.struct(
+                *[
+                    f.expression.to_column().alias(f.name)
+                    for f in q.projection.fields
+                ]
             )
-            if q.projection.fields is not None:
-                payload = F.struct(
-                    *[
-                        f.expression.to_column().alias(f.name)
-                        for f in q.projection.fields
-                    ]
-                )
-            else:
-                # pass-through projection: the struct must cover the
-                # BATCH columns only (a plan-time "*" would swallow the
-                # flag columns added upstream) — bound at run time
-                payload = None
-            flag_cols.append(fcol.alias(f"__f{i}"))
-            payload_cols.append(payload)
-        chunks.append(RawChunkPlan(flag_cols, payload_cols, caps, list(members)))
-    return chunks
+        else:
+            # pass-through projection: the struct must cover the
+            # BATCH columns only (a plan-time "*" would swallow the
+            # flag columns added upstream) — bound at run time
+            payload = None
+        flag_cols.append(fcol.alias(f"__f{i}"))
+        payload_cols.append(payload)
+    caps = [rq.state.size for rq in members]
+    return RawChunkPlan(flag_cols, payload_cols, caps, list(members))
 
 
 # QUANTILE members per shared pass: each member carries a value + flag

@@ -13,8 +13,15 @@ Measures, at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]:
 3. the predicate partitioner's hit rate on an equality-filtered fleet where
    a known fraction of the fleet's constants are absent from the batch
    (reference: SimpleEqualityPartitioner / FilterBolt categorize,
-   /root/reference src/main/java/com/yahoo/bullet/storm/FilterBolt.java:148-155).
+   FilterBolt.java:148-155);
+4. the RAW crossover: fleets of 1-48 RAW members, each bound both ways on a
+   fresh 2k-row parquet slice through the ``multiquery`` functions — one
+   limit job per member (the batch persisted, as the engine does when more
+   than one job reads it; also unpersisted) against one shared mapInPandas
+   pass, for fresh fleets and for plan-cached ones — which sets
+   ``multiquery.RAW_LIMIT_JOBS_MAX``.
 
+``python scripts/fleet_scale.py raw_crossover`` runs series 4 alone.
 Prints one JSON line; SCALING.md records the series.
 """
 
@@ -22,7 +29,9 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,7 +39,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bullet_storm_spark import get_spark
 from bullet_storm_spark.bql import parse
 from bullet_storm_spark.sources.tables import load_table
-from bullet_storm_spark.streaming import StreamingEngine
+from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
+from bullet_storm_spark.streaming.multiquery import (
+    RAW_LIMIT_JOBS_MAX,
+    raw_chunk_plan,
+    shared_partials,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -78,9 +92,107 @@ def _probe_job_id(spark, tag: str) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
+RAW_FLEETS = (1, 2, 4, 8, 12, 16, 24, 32, 48)
+# fresh: a new fleet each rep, planned inside the timing (adhoc RAW
+# queries); steady: one fleet planned once and bound to a fresh slice
+# each rep (a long-lived RAW fleet)
+RAW_SIDES = (
+    "limit_jobs",
+    "limit_jobs_unpersisted",
+    "pass",
+    "limit_jobs_steady",
+    "pass_steady",
+)
+
+
+def raw_bql(i: int) -> str:
+    # the two adhoc_churn RAW shapes (perfbench/workloads.py): ~30% of
+    # rows match with LIMIT 50, ~3.75% with LIMIT 100
+    lo = (i * 37) % 330
+    width, size = (150, 50) if i % 2 == 0 else (18.75, 100)
+    return (
+        "SELECT event_id, user_id, value FROM STREAM(600000, TIME) "
+        f"WHERE value > {lo} AND value <= {lo + width} LIMIT {size}"
+    )
+
+
+def raw_crossover(spark, reps: int = 7) -> dict:
+    """Median ms per batch of a RAW fleet of each size in RAW_FLEETS bound
+    and collected as one limit job per member or as one shared pass, each
+    rep on a fresh 2k-row slice, the sides interleaved. A side persists the
+    slice when more than one job reads it, as the engine does, except
+    ``limit_jobs_unpersisted``."""
+    from perfbench.workloads import write_slices
+
+    frozen = lambda: 1.0  # noqa: E731
+
+    def fleet(n: int) -> list:
+        registry = QueryRegistry(clock=frozen)
+        return [registry.submit(f"raw{i}", parse(raw_bql(i))) for i in range(n)]
+
+    def plan(rqs: list, side: str) -> list:
+        if side.startswith("pass"):
+            return [raw_chunk_plan(rqs)]
+        return [raw_chunk_plan([rq]) for rq in rqs]
+
+    steady: dict = {}
+    times: dict = {(n, side): [] for n in RAW_FLEETS for side in RAW_SIDES}
+    with tempfile.TemporaryDirectory() as tmp:
+        paths = iter(write_slices(tmp, 7, 2000, 1 + len(times) * reps))
+
+        def bind(n: int, side: str) -> float:
+            frame = spark.read.parquet(next(paths))
+            if side.endswith("_steady"):
+                if (n, side) not in steady:
+                    rqs = fleet(n)
+                    steady[(n, side)] = rqs, plan(rqs, side)
+                rqs, chunks = steady[(n, side)]
+                t0 = time.perf_counter()
+            else:
+                rqs = fleet(n)
+                t0 = time.perf_counter()
+                chunks = plan(rqs, side)
+            persist = side != "limit_jobs_unpersisted" and len(chunks) > 1
+            if persist:
+                frame.persist()
+            try:
+                shared_partials(frame, rqs, chunks=chunks)
+            finally:
+                if persist:
+                    frame.unpersist()
+            return time.perf_counter() - t0
+
+        bind(4, "pass")  # warm the JVM and the Python worker
+        for rep in range(reps):
+            for n in RAW_FLEETS:
+                sides = RAW_SIDES if (rep + n) % 2 else RAW_SIDES[::-1]
+                for side in sides:
+                    times[(n, side)].append(bind(n, side))
+    out: dict = {"rows": 2000, "reps": reps, "fleets": {}}
+    for n in RAW_FLEETS:
+        out["fleets"][str(n)] = {
+            f"{side}_ms": round(1000 * statistics.median(times[(n, side)]), 1)
+            for side in RAW_SIDES
+        }
+    for kind in ("", "_steady"):
+        out[f"limit_jobs{kind}_ahead_at"] = [
+            n
+            for n in RAW_FLEETS
+            if out["fleets"][str(n)][f"limit_jobs{kind}_ms"]
+            < out["fleets"][str(n)][f"pass{kind}_ms"]
+        ]
+    out["RAW_LIMIT_JOBS_MAX"] = RAW_LIMIT_JOBS_MAX
+    return out
+
+
 def main() -> None:
     spark = get_spark(app_name="bullet-storm-spark-fleet-scale")
     spark.sparkContext.setLogLevel("ERROR")
+    if sys.argv[1:] == ["raw_crossover"]:
+        out = {"raw_crossover": raw_crossover(spark)}
+        print(json.dumps(out))
+        spark.stop()
+        return
 
     batch = load_table(spark, SF_DIR, "events").persist()
     batch.count()
@@ -168,6 +280,7 @@ def main() -> None:
         )
 
     batch.unpersist()
+    out["raw_crossover"] = raw_crossover(spark)
     print(json.dumps(out))
     spark.stop()
 

@@ -91,9 +91,17 @@ def test_submit_and_kill_from_separate_process_while_attached(spark, tmp_path):
             assert time.time() < deadline, "external submission never arrived"
             base.limit(0).write.mode("append").parquet(src)  # tick
             time.sleep(0.2)
-        # wait for at least one windowed emission with real counts
+        # wait for a windowed emission that counted rows: a window that
+        # closed before the first data file arrived emits [{'cnt': 0}]
+        def counted():
+            return [
+                c
+                for i, c in engine.results
+                if i == "ext1" and c.records and c.records[0]["cnt"] > 0
+            ]
+
         deadline = time.time() + 120
-        while not any(i == "ext1" and c.records for i, c in engine.results):
+        while not counted():
             assert time.time() < deadline, "no windowed result emitted"
             base.write.mode("append").parquet(src)
             time.sleep(0.2)
@@ -111,5 +119,4 @@ def test_submit_and_kill_from_separate_process_while_attached(spark, tmp_path):
 
     signals = [c.meta.get(SIGNAL_KEY) for i, c in engine.results if i == "ext1"]
     assert signals[-1] == "KILL"
-    counted = [c for i, c in engine.results if i == "ext1" and c.records]
-    assert counted and counted[0].records[0]["cnt"] > 0
+    assert counted()

@@ -256,20 +256,24 @@ def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
 
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
     # the cached plans hold their members' state: a fleet that shrinks to
-    # one RAW query must re-plan without the retired members, and an
-    # engine with no query left must drop the plans
+    # one RAW query must re-plan without the retired members, the RAW
+    # survivor keeps its own limit-job plan, and an engine with no query
+    # left must drop the plans
     engine = frozen_engine(spark)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
     assert engine._chunk_cache
+    (raw_before,) = engine._raw_chunk_cache
     for qid in list(engine.registry.queries):
         if qid != "raw":
             engine.kill(qid)
     engine.process_batch(batches[1])
     assert engine._chunk_cache == [] and engine._chunk_cache_key == ()
-    (raw_plan,) = engine._raw_chunk_cache
-    assert [rq.id for rq in raw_plan.rqs] == ["raw"]
+    (raw_after,) = engine._raw_chunk_cache
+    assert raw_after is raw_before
+    assert [rq.id for rq in raw_before.rqs] == ["raw"]
+    assert engine.stats()["batch_jobs"] == 1
     engine.kill("raw")
     engine.process_batch(batches[1])
     assert engine._chunk_cache is None and engine._raw_chunk_cache is None
@@ -293,17 +297,22 @@ def _raw_fleet(n: int, size: int = 5, off: int = 0):
 
 
 def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
-    # A RAW fleet on the shared path must keep the per-query contracts:
-    # each query collects EXACTLY its limit of rows matching ITS filter
-    # (projected per ITS projection) and early-COMPLETEs when full.
+    # A RAW fleet on the shared pass (above RAW_LIMIT_JOBS_MAX members)
+    # must keep the per-query contracts: each query collects EXACTLY its
+    # limit of rows matching ITS filter (projected per ITS projection) and
+    # early-COMPLETEs when full.
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    n = RAW_LIMIT_JOBS_MAX + 2
     engine = frozen_engine(spark)
-    for qid, q in _raw_fleet(6).items():
+    for qid, q in _raw_fleet(n).items():
         engine.submit(qid, q)
     emitted = {}
     engine.on_result(lambda qid, clip: emitted.setdefault(qid, clip))
     engine.process_batch(batches[0])
-    assert engine.shared_scan_queries == 6
-    for i in range(6):
+    assert engine.shared_scan_queries == n
+    assert engine.stats()["batch_jobs"] == 1  # one shared pass
+    for i in range(n):
         clip = emitted[f"raw{i}"]
         recs = clip.records
         assert len(recs) == 5, (i, recs)
@@ -316,32 +325,108 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
         assert f"raw{i}" not in engine.registry.queries  # early-COMPLETE
 
 
+def _assert_raw_counts(results, n):
+    # _raw_fleet(n, size=90, off=20) over both batches: member j matches
+    # 59-j rows of batch 0 and 19-j of batch 1, never filling at 90
+    for j in range(n):
+        rows = results[f"raw{j}"]
+        assert len(rows) == 78 - 2 * j, j
+        key = "num" if j % 2 else "n"
+        assert all(r[key] > 20 + j for r in rows), j
+
+
 def test_shared_raw_fleet_equals_per_query_counts(spark, batches):
-    # remaining-capacity decay across batches: a fleet too selective to
-    # fill on batch 0 keeps accumulating on batch 1. filter n>20+i: batch
-    # 0 supplies 59-i matches, batch 1 another 19-i — never full at size
-    # 90, so the fleet stays live and shares BOTH batches. A lone RAW
-    # query is a limit job, not the shared pass: both must ship every
-    # match (content is order-dependent for RAW; counts and the filter
-    # are the contract)
-    queries = _raw_fleet(4, size=90, off=20)
+    # remaining-capacity decay across batches on the shared pass: a fleet
+    # too selective to fill on batch 0 keeps accumulating on batch 1, so
+    # the fleet stays live and shares BOTH batches. A lone RAW query is a
+    # limit job, not the shared pass: both must ship every match (content
+    # is order-dependent for RAW; counts and the filter are the contract)
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    n = RAW_LIMIT_JOBS_MAX + 2
+    queries = _raw_fleet(n, size=90, off=20)
     engine = run_fleet(spark, queries, batches)
-    assert engine.shared_scan_queries == 8
+    assert engine.shared_scan_queries == 2 * n
+    assert engine.stats()["batch_jobs"] == 1  # one shared pass
     got = live_results(engine)
     assert got.keys() == queries.keys()
-    for i, res in enumerate((got, alone_results(spark, queries, batches))):
-        for j in range(4):
-            rows = res[f"raw{j}"]
-            assert len(rows) == 78 - 2 * j, (i, j)
-            key = "num" if j % 2 else "n"
-            assert all(r[key] > 20 + j for r in rows), (i, j)
+    _assert_raw_counts(got, n)
+    _assert_raw_counts(alone_results(spark, queries, batches), n)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_raw_crossover_boundary_gives_the_same_rows(spark, batches, extra):
+    # at RAW_LIMIT_JOBS_MAX members the fleet runs one limit job per
+    # member, one more member and it runs one shared pass; both ship every
+    # member's matches across both batches
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    n = RAW_LIMIT_JOBS_MAX + extra
+    engine = run_fleet(spark, _raw_fleet(n, size=90, off=20), batches)
+    assert engine.stats()["batch_jobs"] == (1 if extra else n)
+    assert [len(cp.rqs) for cp in engine._raw_chunk_cache] == (
+        [n] if extra else [1] * n
+    )
+    # only the pass runs a Python stage
+    plans = [
+        entry[1]._jdf.queryExecution().optimizedPlan().toString()
+        for _, entry in engine._bound_cache["by_chunk"].values()
+    ]
+    assert len(plans) == engine.stats()["batch_jobs"]
+    assert all(("MapInPandas" in p) == bool(extra) for p in plans)
+    _assert_raw_counts(live_results(engine), n)
+
+
+def test_finished_raw_member_runs_no_job(spark, batches):
+    # a 2-member RAW fleet whose first member fills and COMPLETEs on batch
+    # 0: on batch 1 only the survivor's limit job runs, from the plan it
+    # already had
+    engine = frozen_engine(spark)
+    engine.submit("full", Query(aggregation=Raw(size=5), duration_ms=600_000))
+    engine.submit(
+        "open",
+        Query(filter=gt("n", 20), aggregation=Raw(size=90), duration_ms=600_000),
+    )
+    engine.process_batch(batches[0])
+    assert engine.stats()["batch_jobs"] == 2
+    assert "full" not in engine.registry.queries
+    survivor = engine._raw_chunk_cache[1]
+    engine.process_batch(batches[1])
+    assert engine.stats()["batch_jobs"] == 1
+    (raw_after,) = engine._raw_chunk_cache
+    assert raw_after is survivor
+    assert [rq.id for rq in survivor.rqs] == ["open"]
+    assert len(live_results(engine)["open"]) == 59 + 19
+
+
+def test_shrinking_raw_pass_keeps_its_plan(spark, batches):
+    # above RAW_LIMIT_JOBS_MAX the "fleet only shrank" rule still holds: a
+    # member that fills and COMPLETEs leaves the cached pass in place
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    n = RAW_LIMIT_JOBS_MAX + 2
+    engine = frozen_engine(spark)
+    engine.submit("full", Query(aggregation=Raw(size=5), duration_ms=600_000))
+    for qid, q in _raw_fleet(n - 1, size=90, off=20).items():
+        engine.submit(qid, q)
+    engine.process_batch(batches[0])
+    (cached,) = engine._raw_chunk_cache
+    assert "full" not in engine.registry.queries
+    engine.process_batch(batches[1])
+    (raw_after,) = engine._raw_chunk_cache
+    assert raw_after is cached
+    assert engine.stats()["batch_jobs"] == 1
+    _assert_raw_counts(live_results(engine), n - 1)
 
 
 def test_raw_fleet_is_one_chunk_plan():
-    # N RAW members plan into ceil(N / MAX_RAW_MEMBERS_PER_JOB) shared
-    # passes — 50 queries, ONE job per batch (VERDICT r9 item 3)
+    # N > RAW_LIMIT_JOBS_MAX RAW members plan into
+    # ceil(N / MAX_RAW_MEMBERS_PER_JOB) shared passes — 50 queries, ONE
+    # job per batch (VERDICT r9 item 3); a smaller fleet plans one
+    # limit job per member
     from bullet_storm_spark.streaming.multiquery import (
         MAX_RAW_MEMBERS_PER_JOB,
+        RAW_LIMIT_JOBS_MAX,
         RawChunkPlan,
         plan_chunks,
     )
@@ -359,6 +444,10 @@ def test_raw_fleet_is_one_chunk_plan():
     assert len(chunks[0].rqs) == 50
     big = [_RQ(q) for q in _raw_fleet(MAX_RAW_MEMBERS_PER_JOB + 1).values()]
     assert len(plan_chunks(big)) == 2
+    small = [_RQ(q) for q in _raw_fleet(RAW_LIMIT_JOBS_MAX).values()]
+    chunks = plan_chunks(small)
+    assert [cp.rqs for cp in chunks] == [[rq] for rq in small]
+    assert not any(cp.flag_cols for cp in chunks)  # no pass columns
 
 
 def test_shared_quantile_fleet_equals_per_query(spark, batches):
@@ -549,7 +638,7 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
         RAW_FOLD_FANIN,
         _collect_raw_chunk,
         _raw_chunk_folded_df,
-        plan_raw_chunks,
+        raw_chunk_plan,
     )
     from bullet_storm_spark.streaming.state import RawState
 
@@ -565,7 +654,7 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
         rows, "k string, s string, v double, n int"
     ).repartition(parts)
     fleet = [_RQ(q) for q in _raw_fleet(8, size=7).values()]
-    (cp,) = plan_raw_chunks(fleet)
+    cp = raw_chunk_plan(fleet)  # the shared pass, whatever the crossover
     caps_total = sum(cp.caps)
     folded = _raw_chunk_folded_df(batch, cp)
     # the bound that matters: independent of the 128 partitions
