@@ -73,7 +73,6 @@ class StreamingEngine:
         registry: QueryRegistry | None = None,
         channel: ControlChannel | None = None,
         clock: Callable[[], float] = time.time,
-        rate_limit_records_per_s: int | None = None,
         config: "EngineConfig | None" = None,
         enable_query_partitioner: bool = False,
     ) -> None:
@@ -86,11 +85,6 @@ class StreamingEngine:
             clock=clock, max_duration_ms=self.config.max_query_duration_ms
         )
         self.channel = channel or ControlChannel()
-        self.rate_limit = (
-            rate_limit_records_per_s
-            if rate_limit_records_per_s is not None
-            else self.config.rate_limit_records_per_s
-        )
         self.enable_query_partitioner = enable_query_partitioner
         self.queries_pruned = 0  # partitioner effectiveness counter
         self.shared_scan_queries = 0  # queries the batch scans served
@@ -125,12 +119,6 @@ class StreamingEngine:
         self._chunk_cache = None
         self._raw_chunk_cache_key: tuple | None = None
         self._raw_chunk_cache = None
-        # bound-DataFrame cache (multiquery.shared_partials): chunk plans
-        # attached to a concrete batch frame. Hits when a stable fleet
-        # replays one frame (bench/tests/replay); a fresh foreachBatch
-        # frame misses by key and rebinds. Invalidated with the plan
-        # caches above.
-        self._bound_cache: dict = {}
 
     def add_metrics_consumer(self, consumer) -> None:
         """Register a pluggable metrics consumer (BulletMetrics analogue,
@@ -366,7 +354,6 @@ class StreamingEngine:
                         scan,
                         pool_width=self.job_pool_width,
                         chunks=chunks,
-                        bound_cache=self._bound_cache,
                     )
                 except Exception:  # noqa: BLE001 - each member reruns alone
                     self._drop_shared_plans()
@@ -404,14 +391,15 @@ class StreamingEngine:
                 if rq.id in failed:
                     self._fail(rq, failed[rq.id])
             active = [rq for rq in active if rq.id not in failed]
+            rate_limit = self.config.rate_limit_records_per_s
             for rq in active:
                 # rate limiting (JoinBolt.java:159-160,194-208): FAIL with
                 # partial results + a structured RateLimitError object in
                 # the Clip meta (FilterBolt.java:111,191-193 error stream)
-                if self.rate_limit is not None:
+                if rate_limit is not None:
                     elapsed_s = max((now_ms - rq.receive_time_ms) / 1000.0, 0.001)
                     rate = rq.records_consumed / elapsed_s
-                    if rate > self.rate_limit:
+                    if rate > rate_limit:
                         self.metrics.increment(M.QUERIES_RATE_EXCEEDED)
                         self._finish(
                             rq,
@@ -421,7 +409,7 @@ class StreamingEngine:
                                     "error": (
                                         "Query exceeded the maximum record "
                                         f"rate: {rate:.1f} records/s > "
-                                        f"{self.rate_limit} records/s limit"
+                                        f"{rate_limit} records/s limit"
                                     ),
                                     "resolutions": [
                                         "Make the query filter more selective",
@@ -450,12 +438,17 @@ class StreamingEngine:
         self._chunk_cache = None
         self._raw_chunk_cache_key = None
         self._raw_chunk_cache = None
-        self._bound_cache.clear()
 
     def _shared_chunks(self, fleet: list) -> list:
         """The fleet's chunk plans (RAW passes first), from the plan caches;
-        a cache rebuilds only when its half of the fleet changed."""
-        from bullet_storm_spark.streaming.multiquery import plan_chunks, split_fleet
+        a cache re-plans only when its half of the fleet changed, and a
+        RAW pass fleet that only shrank keeps its passes
+        (``multiquery.plan_raw_chunks``)."""
+        from bullet_storm_spark.streaming.multiquery import (
+            plan_chunks,
+            plan_raw_chunks,
+            split_fleet,
+        )
 
         # the one split definition (multiquery.split_fleet) keys BOTH
         # caches, so the cache layout can't drift from the planner's own
@@ -467,42 +460,11 @@ class StreamingEngine:
             self._chunk_cache_key = key
         raw_key = tuple((rq.id, id(rq)) for rq in raw_fleet)
         if raw_key != self._raw_chunk_cache_key:
-            self._raw_chunk_cache = self._raw_plans(raw_fleet)
+            self._raw_chunk_cache = plan_raw_chunks(
+                raw_fleet, cached=self._raw_chunk_cache or ()
+            )
             self._raw_chunk_cache_key = raw_key
         return self._raw_chunk_cache + self._chunk_cache
-
-    def _raw_plans(self, raw_fleet: list) -> list:
-        """The RAW plans for a changed RAW fleet, reusing what still fits.
-        RAW members fill and COMPLETE by design, often a few per batch, so
-        re-planning every survivor on each change kept the bench fleet in
-        permanent plan churn (~0.8 s/batch, r12)."""
-        from bullet_storm_spark.streaming.multiquery import (
-            RAW_LIMIT_JOBS_MAX,
-            plan_raw_chunks,
-        )
-
-        cached = self._raw_chunk_cache or []
-        if len(raw_fleet) <= RAW_LIMIT_JOBS_MAX:
-            # one limit job per member: survivors keep their plans, a new
-            # member plans only itself, and a finished member's plan is
-            # dropped (kept, its limit job would still run with room 0)
-            own = {id(cp.rqs[0]): cp for cp in cached if len(cp.rqs) == 1}
-            fresh = iter(
-                plan_raw_chunks([rq for rq in raw_fleet if id(rq) not in own])
-            )
-            return [own.get(id(rq)) or next(fresh) for rq in raw_fleet]
-        # a pass fleet that only SHRANK keeps its cached passes: completed
-        # members' rows are skipped at collect time (room = 0) and ignored
-        # by the active-query merge, so results are identical. Re-plan on
-        # NEW members, or once live members drop below half the plan (dead
-        # flag columns still evaluate JVM-side — bounded waste). A one-member
-        # tail chunk whose member finished is a limit job: dropped, as above.
-        live = {id(rq) for rq in raw_fleet}
-        cached = [cp for cp in cached if len(cp.rqs) > 1 or id(cp.rqs[0]) in live]
-        cached_ids = {id(rq) for cp in cached for rq in cp.rqs}
-        if cached and live <= cached_ids and len(live) * 2 >= len(cached_ids):
-            return cached
-        return plan_raw_chunks(raw_fleet)
 
     def stats(self) -> dict[str, Any]:
         """Engine statistics — the FilterBolt periodic stats report

@@ -316,13 +316,27 @@ class RawChunkPlan:
     _alive_filter: Any = None
 
 
-def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
+def plan_raw_chunks(raw_queries, cached=()) -> list[RawChunkPlan]:
     """The RAW fleet planner (the engine's split RAW plan cache calls this
     directly on ``split_fleet``'s first half): one one-member plan per
     query up to RAW_LIMIT_JOBS_MAX members, shared passes of
-    MAX_RAW_MEMBERS_PER_JOB members above it."""
+    MAX_RAW_MEMBERS_PER_JOB members above it.
+
+    ``cached`` is the fleet's previous plan. A pass fleet that only SHRANK
+    keeps it: completed members' rows are skipped at collect time (room
+    0) and ignored by the active-query merge, so results are identical.
+    It re-plans on NEW members, or once live members drop below half the
+    plan (dead flag columns still evaluate JVM-side — bounded waste). A
+    one-member plan builds no pass columns, so the limit jobs always
+    re-plan, and a one-member tail chunk whose member finished is
+    dropped (kept, its limit job would still run with room 0)."""
     if len(raw_queries) <= RAW_LIMIT_JOBS_MAX:
         return [raw_chunk_plan([rq]) for rq in raw_queries]
+    live = {id(rq) for rq in raw_queries}
+    cached = [cp for cp in cached if len(cp.rqs) > 1 or id(cp.rqs[0]) in live]
+    cached_ids = {id(rq) for cp in cached for rq in cp.rqs}
+    if cached and live <= cached_ids and len(live) * 2 >= len(cached_ids):
+        return cached
     return [
         raw_chunk_plan(raw_queries[start : start + MAX_RAW_MEMBERS_PER_JOB])
         for start in range(0, len(raw_queries), MAX_RAW_MEMBERS_PER_JOB)
@@ -402,9 +416,7 @@ def _quantile_chunk_df(
     summaries (self-contained closures — cloudpickle ships them by value,
     with no package import on workers — mirroring KLLSummary._compress's
     deterministic alternate-keep compression), tree-merged executor-side,
-    as __levels/__n/__nrec rows for state.merge.
-    Returns the BOUND DataFrame (batch-independent closures), so the
-    engine's bound cache can reuse it across replays of one frame."""
+    as __levels/__n/__nrec rows for state.merge."""
     n = len(cp.rqs)
     cap = cp.rqs[0].state.SAMPLE_CAP
     fanin = cp.rqs[0].state.TREE_FANIN
@@ -494,8 +506,7 @@ def _quantile_chunk_df(
 def _collect_quantile_chunk(
     out_df: DataFrame, cp: QuantileChunkPlan
 ) -> list[list[dict]]:
-    """Collect a (possibly cached) bound quantile pass into per-member
-    partial-row lists."""
+    """Collect a bound quantile pass into per-member partial-row lists."""
     result: list[list[dict]] = [[] for _ in range(len(cp.rqs))]
     for row in out_df.collect():
         result[row["member"]].append(
@@ -632,10 +643,9 @@ def _raw_chunk_folded_df(batch_df: DataFrame, cp: RawChunkPlan) -> DataFrame:
 
 
 def _collect_raw_chunk(folded: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
-    """Collect a (possibly cached) bound RAW pass; per-member rows capped
-    at each member's CURRENT remaining capacity (read at call time, like
-    RawState.partial's per-batch limit — the capacity is driver-side, so
-    the bound frame stays batch/state-independent)."""
+    """Collect a bound RAW pass; per-member rows capped at each member's
+    CURRENT remaining capacity (read at call time — the capacity is
+    driver-side, so the plan stays batch/state-independent)."""
     n = len(cp.rqs)
     rows = folded.collect()
     result: list[list[dict]] = [[] for _ in range(n)]
@@ -715,95 +725,44 @@ def plan_chunks(queries) -> list:
 
 
 def shared_partials(
-    batch_df: DataFrame, queries, pool_width: int = 8, chunks=None,
-    bound_cache: dict | None = None,
+    batch_df: DataFrame, queries, pool_width: int = 8, chunks=None
 ) -> dict[str, Any]:
     """Compute every query's partial in one job per distinct key-set
     (chunked to MAX_MEMBERS_PER_JOB queries per plan). Chunk jobs execute
     concurrently — on low-partition batches a single job can't use the
     cluster, so concurrency across jobs supplies the parallelism. Pass
     ``chunks`` (from ``plan_chunks``, cached across batches for a stable
-    fleet) to skip plan construction. An
-    aggregation job is collected as one Arrow table and split per member
-    by column selection (``split_members``); RAW and QUANTILE passes are
-    collected as Rows.
-
-    ``bound_cache`` (engine-owned dict) additionally caches the BOUND
-    DataFrames — chunk Column trees attached to a concrete batch frame —
-    keyed on (chunks identity, batch frame identity). Re-collecting a
-    previously bound DataFrame skips Catalyst re-planning of an identical
-    plan (measured r12: 0.35 s fresh-bind-and-collect vs 0.10 s re-collect
-    per 16-member chunk — the data is still fully re-scanned and
-    re-aggregated on every call, only the PLAN is reused). A stable fleet
-    replaying a pinned frame (the bench, tests, replay tooling) hits it
-    every batch; a fresh foreachBatch frame changes the key and rebinds,
-    so streaming pays exactly the old cost. The cache holds one batch's
-    bindings (plus a strong ref to the keyed frame so id() stays valid)."""
+    fleet) to skip plan construction. Each chunk binds to the batch and
+    is collected on the pool: an aggregation job as one Arrow table split
+    per member by column selection (``split_members``), RAW and QUANTILE
+    passes as Rows."""
     from concurrent.futures import ThreadPoolExecutor
 
-    result: dict[str, Any] = {rq.id: [] for rq in queries}
     if chunks is None:
         chunks = plan_chunks(queries)
-    # PER-CHUNK bound entries keyed on the chunk object: RAW members fill
-    # and COMPLETE by design, so the raw plan churns while the agg fleet
-    # is stable — a whole-fleet key would re-bind all ~30 chunks on every
-    # RAW completion (the r10 split-cache lesson, applied to bindings).
-    # One batch frame's bindings are held at a time; a new frame clears
-    # the map (strong refs below keep the id()-keyed objects alive, so a
-    # recycled id can never false-hit).
-    by_chunk = None
-    if bound_cache is not None:
-        if bound_cache.get("batch") != id(batch_df):
-            bound_cache.clear()
-            bound_cache.update(
-                batch=id(batch_df), batch_ref=batch_df, by_chunk={}
-            )
-        by_chunk = bound_cache["by_chunk"]
-    bound = []
-    for cp in chunks:
-        if by_chunk is not None:
-            hit = by_chunk.get(id(cp))
-            if hit is not None and hit[0] is cp:
-                # identity re-check: the stored strong ref rules out a
-                # recycled id from a GC'd plan object
-                bound.append(hit[1])
-                continue
+
+    def run(cp) -> dict[str, Any]:
         if isinstance(cp, RawChunkPlan):
-            entry = ("raw", _raw_chunk_folded_df(batch_df, cp), cp)
+            rows = _collect_raw_chunk(_raw_chunk_folded_df(batch_df, cp), cp)
         elif isinstance(cp, QuantileChunkPlan):
-            entry = ("quant", _quantile_chunk_df(batch_df, cp), cp)
+            rows = _collect_quantile_chunk(_quantile_chunk_df(batch_df, cp), cp)
         else:
             pre = batch_df.select(*cp.pre_cols)
             if cp.key_names:
-                out = pre.groupBy(
-                    *[F.col(k) for k in cp.key_names]
-                ).agg(*cp.aggs)
+                out = pre.groupBy(*[F.col(k) for k in cp.key_names]).agg(*cp.aggs)
             else:
                 out = pre.agg(*cp.aggs)
-            entry = ("agg", out, cp.members)
-        bound.append(entry)
-        if by_chunk is not None:
-            by_chunk[id(cp)] = (cp, entry)
+            return split_members(out.toArrow(), cp.members)
+        return {rq.id: member_rows for rq, member_rows in zip(cp.rqs, rows)}
 
-    def run(chunk):
-        tag, out, members = chunk
-        if tag == "raw":
-            return _collect_raw_chunk(out, members), members
-        if tag == "quant":
-            return _collect_quantile_chunk(out, members), members
-        return out.toArrow(), members
-
-    if len(bound) > 1:
-        with ThreadPoolExecutor(max_workers=min(len(bound), pool_width)) as pool:
-            computed = list(pool.map(run, bound))
+    result: dict[str, Any] = {rq.id: [] for rq in queries}
+    if len(chunks) > 1:
+        with ThreadPoolExecutor(max_workers=min(len(chunks), pool_width)) as pool:
+            for partials in pool.map(run, chunks):
+                result.update(partials)
     else:
-        computed = [run(bound[0])] if bound else []
-    for rows, members in computed:
-        if isinstance(members, (RawChunkPlan, QuantileChunkPlan)):
-            for rq, member_rows in zip(members.rqs, rows):
-                result[rq.id] = member_rows
-        else:
-            result.update(split_members(rows, members))
+        for cp in chunks:
+            result.update(run(cp))
     return result
 
 

@@ -6,6 +6,7 @@ StreamingQueryListener bridge forwards Spark's own streaming telemetry."""
 import time
 
 from bullet_storm_spark import Distribution, DistributionType, Query, Raw
+from bullet_storm_spark.config import EngineConfig
 from bullet_storm_spark.plans.query import TumblingWindow
 from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
 from bullet_storm_spark.streaming import metrics as M
@@ -32,7 +33,7 @@ def test_lifecycle_counters_fan_out(spark):
         spark,
         registry=QueryRegistry(clock=lambda: clockbox[0]),
         clock=lambda: clockbox[0],
-        rate_limit_records_per_s=100,
+        config=EngineConfig(rate_limit_records_per_s=100),
     )
     rec = Recorder()
     engine.add_metrics_consumer(rec)

@@ -254,30 +254,31 @@ def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
     assert _outcomes(engine) == base
 
 
+def _raw_plan_ids(engine) -> list:
+    return [[rq.id for rq in cp.rqs] for cp in engine._raw_chunk_cache]
+
+
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
     # the cached plans hold their members' state: a fleet that shrinks to
     # one RAW query must re-plan without the retired members, the RAW
-    # survivor keeps its own limit-job plan, and an engine with no query
-    # left must drop the plans
+    # survivor runs its own limit job, and an engine with no query left
+    # must drop the plans
     engine = frozen_engine(spark)
     for qid, q in _mixed_queries().items():
         engine.submit(qid, q)
     engine.process_batch(batches[0])
     assert engine._chunk_cache
-    (raw_before,) = engine._raw_chunk_cache
+    assert _raw_plan_ids(engine) == [["raw"]]
     for qid in list(engine.registry.queries):
         if qid != "raw":
             engine.kill(qid)
     engine.process_batch(batches[1])
     assert engine._chunk_cache == [] and engine._chunk_cache_key == ()
-    (raw_after,) = engine._raw_chunk_cache
-    assert raw_after is raw_before
-    assert [rq.id for rq in raw_before.rqs] == ["raw"]
+    assert _raw_plan_ids(engine) == [["raw"]]
     assert engine.stats()["batch_jobs"] == 1
     engine.kill("raw")
     engine.process_batch(batches[1])
     assert engine._chunk_cache is None and engine._raw_chunk_cache is None
-    assert engine._bound_cache == {}
 
 
 def _raw_fleet(n: int, size: int = 5, off: int = 0):
@@ -368,9 +369,14 @@ def test_raw_crossover_boundary_gives_the_same_rows(spark, batches, extra):
         [n] if extra else [1] * n
     )
     # only the pass runs a Python stage
+    from bullet_storm_spark.streaming.multiquery import _raw_chunk_folded_df
+
     plans = [
-        entry[1]._jdf.queryExecution().optimizedPlan().toString()
-        for _, entry in engine._bound_cache["by_chunk"].values()
+        _raw_chunk_folded_df(batches[1], cp)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+        for cp in engine._raw_chunk_cache
     ]
     assert len(plans) == engine.stats()["batch_jobs"]
     assert all(("MapInPandas" in p) == bool(extra) for p in plans)
@@ -379,8 +385,7 @@ def test_raw_crossover_boundary_gives_the_same_rows(spark, batches, extra):
 
 def test_finished_raw_member_runs_no_job(spark, batches):
     # a 2-member RAW fleet whose first member fills and COMPLETEs on batch
-    # 0: on batch 1 only the survivor's limit job runs, from the plan it
-    # already had
+    # 0: on batch 1 only the survivor's limit job runs
     engine = frozen_engine(spark)
     engine.submit("full", Query(aggregation=Raw(size=5), duration_ms=600_000))
     engine.submit(
@@ -390,12 +395,9 @@ def test_finished_raw_member_runs_no_job(spark, batches):
     engine.process_batch(batches[0])
     assert engine.stats()["batch_jobs"] == 2
     assert "full" not in engine.registry.queries
-    survivor = engine._raw_chunk_cache[1]
     engine.process_batch(batches[1])
     assert engine.stats()["batch_jobs"] == 1
-    (raw_after,) = engine._raw_chunk_cache
-    assert raw_after is survivor
-    assert [rq.id for rq in survivor.rqs] == ["open"]
+    assert _raw_plan_ids(engine) == [["open"]]
     assert len(live_results(engine)["open"]) == 59 + 19
 
 
@@ -417,6 +419,25 @@ def test_shrinking_raw_pass_keeps_its_plan(spark, batches):
     assert raw_after is cached
     assert engine.stats()["batch_jobs"] == 1
     _assert_raw_counts(live_results(engine), n - 1)
+
+
+def test_raw_pass_shrinking_to_the_crossover_runs_limit_jobs(spark, batches):
+    # a pass fleet of RAW_LIMIT_JOBS_MAX + 1 members, one of which fills
+    # and COMPLETEs on batch 0: on batch 1 the survivors re-plan as one
+    # limit job each
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    engine = frozen_engine(spark)
+    engine.submit("full", Query(aggregation=Raw(size=5), duration_ms=600_000))
+    for qid, q in _raw_fleet(RAW_LIMIT_JOBS_MAX, size=90, off=20).items():
+        engine.submit(qid, q)
+    engine.process_batch(batches[0])
+    assert engine.stats()["batch_jobs"] == 1
+    assert "full" not in engine.registry.queries
+    engine.process_batch(batches[1])
+    assert engine.stats()["batch_jobs"] == RAW_LIMIT_JOBS_MAX
+    assert _raw_plan_ids(engine) == [[f"raw{j}"] for j in range(RAW_LIMIT_JOBS_MAX)]
+    _assert_raw_counts(live_results(engine), RAW_LIMIT_JOBS_MAX)
 
 
 def test_raw_fleet_is_one_chunk_plan():

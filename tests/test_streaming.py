@@ -20,6 +20,7 @@ from bullet_storm_spark import (
     TumblingWindow,
 )
 from bullet_storm_spark.clip import SIGNAL_KEY, WINDOW_NUMBER_KEY
+from bullet_storm_spark.config import EngineConfig
 from bullet_storm_spark.plans.expressions import eq, gt
 from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
 from bullet_storm_spark.streaming.registry import QueryStatus
@@ -258,7 +259,7 @@ def test_rate_limit_fail(spark, clock):
         spark,
         registry=QueryRegistry(clock=clock),
         clock=clock,
-        rate_limit_records_per_s=10,
+        config=EngineConfig(rate_limit_records_per_s=10),
     )
     engine.submit("rl1", Query(aggregation=Raw(size=10_000), duration_ms=60_000))
     clock.advance_ms(100)
@@ -286,7 +287,8 @@ def test_rate_limit_accounting_rides_partial_job(spark, clock, monkeypatch):
         spark,
         registry=QueryRegistry(clock=clock),
         clock=clock,
-        rate_limit_records_per_s=1_000_000,  # armed but not tripped
+        # armed but not tripped
+        config=EngineConfig(rate_limit_records_per_s=1_000_000),
     )
     # GROUP BY with no COUNT op (the r1 df.count() trigger), COUNT
     # DISTINCT (exact + approx), DISTRIBUTION PMF + QUANTILE
