@@ -14,8 +14,6 @@ correctness reference.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, functions as F
 
 
@@ -61,10 +59,11 @@ def cosine(a: Column, b: Column) -> Column:
 # builder therefore wraps its chain in a per-row guard:
 #   CASE WHEN size(v) <= dim THEN <unrolled> ELSE <hof fold> END
 # so an over-length row takes the bit-identical HOF branch instead of a
-# truncated sum, and the scale gate can NEVER change results (r12,
-# VERDICT r11 item 6; pinned by tests/test_scale_gates.py's ragged
-# fuzz). The ELSE subtree is the compact fold (a few nodes); CASE is
-# lazy, so conforming rows never evaluate it.
+# truncated sum, and the "unroll" scale gate (operators.common) can
+# NEVER change results (r12, VERDICT r11 item 6; pinned by
+# tests/test_scale_gates.py's ragged fuzz). The ELSE subtree is the
+# compact fold (a few nodes); CASE is lazy, so conforming rows never
+# evaluate it.
 #
 # BUILD COST: each builder renders ONE SQL string parsed by a single
 # F.expr. The original Column-by-Column loop cost ~5 py4j round trips per
@@ -78,48 +77,6 @@ def cosine(a: Column, b: Column) -> Column:
 # the fragment is repeated per term.
 
 VecRef = "Column | str"
-
-
-# ---------------------------------------------------------------------------
-# Scale gate: unrolled trees only when the input is big enough to pay
-# ---------------------------------------------------------------------------
-# The unrolled chains trade PER-ROW cost (compiled arithmetic instead of
-# interpreted lambda frames) for PER-TASK and PER-ACTION cost: a dim-64
-# chain is a few thousand Expression nodes, and every task Java-
-# deserializes the stage's expression tree while the driver re-pays
-# physical planning, codegen source generation and task-binary
-# serialization on each action. Measured at sf0.1 (local[32], r11): the
-# tree overhead is ~0.1 s PER TASK (UI REST executorDeserializeTime:
-# 3.8 s over 37 tasks on embed_cos_histogram_capped, plus 2.3 s GC) while
-# the whole per-row compute is milliseconds — the unrolled form LOST
-# 1.7-2.7x against the compact HOF tree on every bucket-join entry. At
-# production row counts the ledger flips: >= ~100k rows per task, the
-# interpreted HOF walk (~5 us/row for a 64-dim cosine) costs seconds per
-# task against the fixed ~0.1 s tree overhead. The gate picks per frame:
-# below the threshold the operators build the HOF forms (identical
-# results — the unrolled chains were verified bit-identical to the HOF
-# fold), above it the unrolled forms. Threshold is the optimizer's size
-# estimate (parquet footer stats, never an action), env-tunable for
-# cluster deployments; 32 MB ~ 60k+ 64-dim rows, comfortably past the
-# crossover on either side.
-
-_UNROLL_MIN_BYTES_ENV = "SPARK_GRAFT_UNROLL_MIN_BYTES"
-
-
-def unroll_min_bytes() -> int:
-    return int(os.environ.get(_UNROLL_MIN_BYTES_ENV, str(32 << 20)))
-
-
-def prefer_fixed(df) -> bool:
-    """True when ``df`` is big enough that the unrolled fixed-dim forms
-    beat their expression-tree overhead (see block comment above)."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover - stats unavailable -> assume big
-        return True
-    return size >= unroll_min_bytes()
 
 
 def _ref(x) -> str:

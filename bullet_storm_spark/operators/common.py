@@ -1,5 +1,5 @@
 """Shared helpers for operator lowerings: post-aggregation application and
-SQL assembly used by every aggregation type."""
+SQL assembly used by every aggregation type, and the scale gates."""
 
 from __future__ import annotations
 
@@ -79,13 +79,72 @@ def post_sql(inner: str, post: Sequence[PostAggregation], limit: int | None) -> 
     return sql
 
 
-_HUB_MIN_BYTES_ENV = "SPARK_GRAFT_HUB_MIN_BYTES"
+# ---------------------------------------------------------------------------
+# Scale gates: branches that pay only past a measured input size
+# ---------------------------------------------------------------------------
+# Codegen'd JVM code and interpreted per-row code, one task and many,
+# one lineage run and a checkpoint: each pair costs differently at
+# different sizes, so an operator with such a choice asks scale_gate()
+# which branch this frame takes. Both branches return identical rows
+# (tests/test_scale_gates.py). Thresholds are bytes of the optimizer's
+# size estimate, compared with >= and read at call time.
+SCALE_GATE_MIN_BYTES = {
+    # Unrolled fixed-dim vector chains (functions.vectors *_fixed) vs the
+    # compact HOF trees. The unrolled chains trade PER-ROW cost (compiled
+    # arithmetic instead of interpreted lambda frames) for PER-TASK and
+    # PER-ACTION cost: a dim-64 chain is a few thousand Expression nodes
+    # that every task Java-deserializes while the driver re-pays physical
+    # planning, codegen and task-binary serialization on each action.
+    # Measured at sf0.1 (local[32], r11): ~0.1 s tree overhead PER TASK
+    # (UI REST executorDeserializeTime: 3.8 s over 37 tasks on
+    # embed_cos_histogram_capped, plus 2.3 s GC) against milliseconds of
+    # per-row compute — the unrolled form LOST 1.7-2.7x on every
+    # bucket-join entry. At >= ~100k rows per task the interpreted HOF
+    # walk (~5 us/row for a 64-dim cosine) costs seconds per task and the
+    # ledger flips. 32 MB ~ 60k+ 64-dim rows, past the crossover on
+    # either side.
+    "unroll": 32 << 20,
+    # Eager localCheckpoint of a multi-consumer hub (hub_checkpoint) vs
+    # re-running its lineage per consumer. The checkpoint costs an extra
+    # job, hub serialization and a pipeline barrier, which below this
+    # source size exceeds the duplicate lineage it saves (measured r11 at
+    # sf0.1: events_acf 0.52 s re-deriving the hourly cells twice vs
+    # 0.86 s checkpointing them; text_kn_doc_score 1.67 vs 2.26).
+    "hub": 32 << 20,
+    # Spreading a scan narrower than the cores before a codegen'd SQL
+    # pair sweep (spread_if_narrow). Below this the exchange plus 32-task
+    # scheduling costs more than the single-task sweep (measured: the
+    # sf0.1 2000-row arm 1.2 s spread vs 0.8 s unspread).
+    "spread": 8 << 20,
+    # The same spread before an Arrow/BLAS matmul sweep. numpy computes
+    # ~100x more dot products per second than the codegen'd SQL chain,
+    # so the exchange (which shuffles the whole vector table) overtakes
+    # the parallelism it buys far later. Measured at the sf10
+    # weak-scaling point (53 MB embeddings, 200k x 64): the SQL
+    # brute-force spread WINS 3.5x (2.3-3.7 s vs 7.5-10.1 s) while the
+    # Arrow matmul spread LOSES ~15% (9.2-11.5 s unspread vs 9.3-15.1 s
+    # spread) — WEAK_SCALING.json gate_crossovers_r12. Parquet row-group
+    # splits bound a cluster scan task near 128 MB (~0.3 s of BLAS), so
+    # the exchange stays a net loss until per-row work grows.
+    "arrow_spread": 1 << 30,
+}
+
+# Long.MaxValue: the estimate an in-memory (LogicalRDD) frame reports
+_UNKNOWN_SIZE = (1 << 63) - 1
 
 
-def hub_min_bytes() -> int:
-    import os
-
-    return int(os.environ.get(_HUB_MIN_BYTES_ENV, str(32 << 20)))
+def scale_gate(name: str, df: DataFrame) -> bool:
+    """True when ``df``'s optimizer size estimate (parquet footer stats,
+    a driver-side call, never an action) reaches
+    ``SCALE_GATE_MIN_BYTES[name]``. An estimate that cannot be read
+    counts as Long.MaxValue, as an in-memory frame's already does, so
+    unknown means big; forcing the small branch on such a frame takes a
+    threshold above Long.MaxValue."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - stats unavailable -> big
+        size = _UNKNOWN_SIZE
+    return size >= SCALE_GATE_MIN_BYTES[name]
 
 
 def hub_checkpoint(df: DataFrame, src: DataFrame) -> DataFrame:
@@ -93,27 +152,29 @@ def hub_checkpoint(df: DataFrame, src: DataFrame) -> DataFrame:
 
     An eager ``localCheckpoint`` replaces N re-runs of the hub's lineage
     with one — the right trade when each re-run re-scans a large source.
-    But the checkpoint itself costs a fixed extra job (driver latency +
-    hub serialization + a pipeline barrier: consumers wait for full
-    materialization), which at small-source scale exceeds the duplicate
-    lineage it saves (measured r11 at sf0.1: events_acf 0.52 s
-    re-deriving the hourly cells twice vs 0.86 s checkpointing them;
-    text_kn_doc_score 1.67 vs 2.26). Gate on the SOURCE's optimizer size
-    estimate — the thing each extra lineage run would re-scan — with the
-    same posture as functions.vectors.prefer_fixed: below the threshold
-    return the frame unmaterialized (the optimizer re-derives it, r10
-    behavior), above it checkpoint. Sites whose hub wins at ANY scale
-    (measured: the session-basket and kn-bigram hubs) keep an
-    unconditional localCheckpoint instead of this gate."""
-    try:
-        size = int(
-            src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover - stats unavailable -> big
-        size = 1 << 62
-    if size >= hub_min_bytes():
-        return df.localCheckpoint()
-    return df
+    Gated on the SOURCE's size, the thing each extra lineage run would
+    re-scan: below the "hub" threshold the frame is returned
+    unmaterialized and the optimizer re-derives it. Sites whose hub wins
+    at ANY scale (measured: the session-basket and kn-bigram hubs) keep
+    an unconditional localCheckpoint instead of this gate."""
+    return df.localCheckpoint() if scale_gate("hub", src) else df
+
+
+def spread_if_narrow(
+    base: DataFrame, src: DataFrame, gate: str, *keys: str
+) -> DataFrame:
+    """``base`` repartitioned to the cores when ``src`` passes ``gate``
+    and scans narrower than the cores, else ``base`` itself (guide §2.5
+    input skew: a single-file table runs a whole pair sweep in ONE
+    task). ``base`` must be a narrow projection of ``src``, so the
+    partition count is read from ``src``. The size gate runs first: it
+    is a cheap driver-side read, while ``rdd.getNumPartitions()`` pays a
+    physical-planning pass of the frame."""
+    if scale_gate(gate, src):
+        par = src.sparkSession.sparkContext.defaultParallelism
+        if src.rdd.getNumPartitions() < par:
+            return base.repartition(par, *keys)
+    return base
 
 
 def fmt_point(x: float) -> str:
@@ -148,7 +209,7 @@ def hourly_cells(df: DataFrame, key_col: str) -> DataFrame:
     # densifying join) — materialize the keys × hours frame once so every
     # series operator's event collapse runs once, not twice (guide §3.3;
     # this is the shared first stage of the whole EWMA/changepoint/
-    # Theil-Sen/Holt/forecast family). Size-gated: below hub_min_bytes
+    # Theil-Sen/Holt/forecast family). Size-gated: below the "hub" gate
     # the checkpoint job costs more than the second collapse (measured
     # events_acf 0.52 s ungated-small vs 0.86 s checkpointed at sf0.1).
     observed = hub_checkpoint(observed, df)

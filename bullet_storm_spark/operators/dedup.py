@@ -973,19 +973,19 @@ def embedding_neardup_pairs_lsh(
         dot_fixed,
         norm,
         norm_fixed,
-        prefer_fixed,
     )
+    from bullet_storm_spark.operators.common import scale_gate
     from bullet_storm_spark.operators.similarity import (
         LSH_SEED,
         _bucket_col,
         hyperplanes,
     )
 
-    # unrolled forms only at scale (functions.vectors.prefer_fixed): the
+    # unrolled forms only at scale (the "unroll" scale gate): the
     # ntables × nbits × dim bucket chain is ~5k Expression nodes whose
     # per-task deserialization dominates a small corpus run; the HOF
     # twins are bit-identical
-    fixed = prefer_fixed(df)
+    fixed = scale_gate("unroll", df)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     buckets = F.array(
         *[

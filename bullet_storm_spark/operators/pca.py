@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from bullet_storm_spark.functions.vectors import as_double, dot
+from bullet_storm_spark.operators.common import scale_gate
 from bullet_storm_spark.operators.similarity import _planes_lit
 
 COEF_DP = 9
@@ -120,7 +121,7 @@ def pca_project(
     # one parsed SQL array expression (the functions.vectors fixed-form
     # discipline): each component's dot unrolls to the codegen-able chain
     # bit-identical to the HOF fold; replaces k × dim interpreted lambda
-    # frames per ROW with compiled arithmetic. Size-gated (prefer_fixed):
+    # frames per ROW with compiled arithmetic. Size-gated ("unroll"):
     # the k × dim unrolled array is the largest tree in the repo
     # (~16 × 64 terms) and its per-task/per-action cost dominates a small
     # projection — below the threshold the compact HOF twin runs instead
@@ -129,14 +130,9 @@ def pca_project(
         _guard_sql,
         _lit_double_sql,
         _ref,
-        as_double,
-        dot,
-        prefer_fixed,
     )
 
-    if not prefer_fixed(df):
-        from bullet_storm_spark.operators.similarity import _planes_lit
-
+    if not scale_gate("unroll", df):
         vv = as_double(F.col(vec_col))
         dots = F.transform(_planes_lit(components), lambda w: dot(vv, w))
         off_lit = F.array(*[F.lit(float(c)) for c in offsets])

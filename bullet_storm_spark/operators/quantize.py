@@ -41,6 +41,7 @@ from bullet_storm_spark.functions.vectors import (
     dot,
     int_dot_fixed,
 )
+from bullet_storm_spark.operators.common import scale_gate, spread_if_narrow
 from bullet_storm_spark.operators.similarity import _rank_topk
 
 QMAX = 127  # symmetric int8 range
@@ -169,13 +170,11 @@ def quantized_neighbors(
     # integer dots are exact in ANY evaluation order, so the unrolled
     # fixed-dim form (whole-stage codegen) is value-identical to the HOF
     # fold — use it when the caller declares the width AND the corpus is
-    # big enough to pay the unrolled tree's per-task overhead
-    # (functions.vectors.prefer_fixed)
-    from bullet_storm_spark.functions.vectors import prefer_fixed
-
+    # big enough to pay the unrolled tree's per-task overhead (the
+    # "unroll" scale gate)
     idot = (
         (lambda x, y: int_dot_fixed(x, y, dim))
-        if dim is not None and prefer_fixed(df)
+        if dim is not None and scale_gate("unroll", df)
         else _int_dot
     )
     quant = scaled.select("__id", "__isq", q.alias("__qv")).select(
@@ -329,23 +328,10 @@ def quantized_neighbors_arrow(
     # item 3: scaling ratio 0.99 = serial). Size-gated spread, the
     # brute_force/spread_ids pattern (guide §2.5/§4); result-identical at
     # any partitioning: the local top-k is margin-safe and the final
-    # Spark expression recomputes the rounded qcos and global rank.
-    from bullet_storm_spark.operators.similarity import (
-        _plan_size_bytes,
-        _ARROW_SPREAD_MIN_BYTES,
-    )
-
-    # size gate FIRST (a driver-side stats read): .rdd.getNumPartitions()
-    # forces full physical planning of the quantize chain — measured
-    # 3.8 s cold / ~1.8 s per timed run on this frame — so it must only
-    # run once the size gate has passed. Partition count is read from
-    # the RAW source (quantize is narrow, so the count is identical).
-    sc = spark.sparkContext
-    if (
-        _plan_size_bytes(df) >= _ARROW_SPREAD_MIN_BYTES
-        and df.rdd.getNumPartitions() < sc.defaultParallelism
-    ):
-        base = base.repartition(sc.defaultParallelism, "id")
+    # Spark expression recomputes the rounded qcos and global rank. The
+    # partition count is read from the RAW source: planning the quantize
+    # chain for it measured 3.8 s cold / ~1.8 s per timed run.
+    base = spread_if_narrow(base, df, "arrow_spread", "id")
     local = base.mapInPandas(local_topk, schema)
     qcos = F.round(
         F.col("idot")
@@ -406,11 +392,9 @@ def quantized_neardup_pairs_lsh(
     # re-ran the O(dim) aggregate per ELEMENT after column pruning let
     # CollapseProject inline it into the lambda)
     q = _qv_col(as_double(F.col("__v")), F.col("__scale"))
-    from bullet_storm_spark.functions.vectors import prefer_fixed
-
-    # unrolled bucket chains only at scale (prefer_fixed): the compact
+    # unrolled bucket chains only at scale ("unroll" gate): the compact
     # HOF twin is bucket-identical and ~1/50th the tree per task
-    fixed = prefer_fixed(df)
+    fixed = scale_gate("unroll", df)
     buckets = F.array(
         *[
             _bucket_col(

@@ -37,8 +37,8 @@ from bullet_storm_spark.functions.vectors import (
     dot_fixed,
     norm,
     norm_fixed,
-    prefer_fixed,
 )
+from bullet_storm_spark.operators.common import scale_gate, spread_if_narrow
 
 LSH_SEED = 42
 
@@ -76,22 +76,13 @@ def brute_force_neighbors(
     # table would run the whole O(|Q| x N) cosine sweep in ONE scan task
     # (guide §2.5 input skew); spread it first when the scan is narrower
     # than the cores — a table that already scans wide pays nothing.
-    # SIZE-GATED: below _SPREAD_MIN_BYTES of input the exchange plus
-    # 32-task scheduling costs more than the whole single-task sweep
-    # (measured: the sf0.1 2000-row arm 1.2 s spread vs 0.8 s unspread);
-    # a production-size table crosses the threshold and still spreads
-    # size gate FIRST: the stats read is a cheap driver-side call while
-    # .rdd.getNumPartitions() pays a physical-planning pass of the frame
-    sc = df.sparkSession.sparkContext
-    if (
-        _plan_size_bytes(df) >= _SPREAD_MIN_BYTES
-        and base.rdd.getNumPartitions() < sc.defaultParallelism
-    ):
-        base = base.repartition(sc.defaultParallelism)
-    # unrolled forms only at scale (prefer_fixed): below the threshold
+    # Size-gated ("spread"): below the threshold the exchange costs more
+    # than the whole single-task sweep.
+    base = spread_if_narrow(base, df, "spread")
+    # unrolled forms only at scale ("unroll" gate): below the threshold
     # the HOF twin is bit-identical and its compact tree avoids the
     # per-task/per-action overhead that dominates a small sweep
-    if dim is not None and prefer_fixed(df):
+    if dim is not None and scale_gate("unroll", df):
         base = base.withColumn("__n", norm_fixed(F.col("v"), dim))
         queries = base.where(query_pred).select(
             F.col("id").alias("query_id"),
@@ -165,41 +156,6 @@ def _planes_lit(planes: list[list[float]]) -> Column:
     return F.from_json(F.lit(json.dumps(planes)), "array<array<double>>")
 
 
-# minimum estimated input size (catalog/parquet stats, no action) before
-# a narrow scan is worth a spreading exchange: below this the single-task
-# compute finishes before 32 tasks even schedule. Env-tunable so a
-# cluster deployment can raise/lower it (guide §2 scale-adaptive, not a
-# local[32] constant).
-_SPREAD_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 8 << 20)
-)
-# the Arrow/BLAS matmul paths get their OWN, much higher threshold: numpy
-# computes ~100x more dot products per second than the codegen'd SQL
-# chain, so the spreading exchange (which shuffles the whole vector
-# table) overtakes the parallelism it buys far later. Measured at the
-# sf10 weak-scaling point (53 MB embeddings, 200k x 64): the SQL
-# brute-force spread WINS 3.5x (2.3-3.7 s vs 7.5-10.1 s) while the Arrow
-# matmul spread LOSES ~15% (9.2-11.5 s unspread vs 9.3-15.1 s spread) —
-# WEAK_SCALING.json gate_crossovers_r12. At real cluster scale parquet
-# row-group splits bound any single scan task near 128 MB (~0.3 s of
-# BLAS), so the exchange stays a net loss until per-row work grows
-# (bigger query fleets) — env-tunable for such deployments.
-_ARROW_SPREAD_MIN_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_ARROW_SPREAD_MIN_BYTES", 1 << 30
-    )
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (parquet footer stats — a
-    driver-side call, never an action)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - stats unavailable -> spread
-        return 1 << 62
-
-
 def _bucket_col(
     vec: Column, planes: list[list[float]], fixed: bool = True
 ) -> Column:
@@ -211,8 +167,8 @@ def _bucket_col(
     Horner fold over reversed bits becomes a nested integer chain —
     integer math, so the bucket id cannot change. Replaces an
     interpreted nbits x dim lambda walk per corpus ROW with compiled
-    arithmetic. With ``fixed=False`` (small inputs — see
-    functions.vectors.prefer_fixed), the compact HOF tree: the unrolled
+    arithmetic. With ``fixed=False`` (small inputs — the "unroll" scale
+    gate, operators.common), the compact HOF tree: the unrolled
     chain is ~1.4k Expression nodes that every task deserializes and the
     driver re-plans per action, which dominates wall time when the
     per-row compute is tiny."""
@@ -284,8 +240,8 @@ def lsh_bucketed_neighbors(
     # (bit-identical to the HOF cosine — functions.vectors fixed-form
     # contract). Small inputs take the compact HOF tree instead: the
     # unrolled chains' per-task/per-action tree overhead dominates when
-    # the bucket join emits few pairs (prefer_fixed rationale).
-    fixed = prefer_fixed(df)
+    # the bucket join emits few pairs ("unroll" scale gate).
+    fixed = scale_gate("unroll", df)
     cols = [
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -513,9 +469,9 @@ def ivf_neighbors_frozen(
     # materialize probes behind the select so the HOF tree is evaluated
     # once per row (CollapseProject would otherwise re-inline it per use);
     # at scale, norm once per row here too — the pair stage below reuses
-    # it (small inputs take the compact HOF cosine instead, prefer_fixed
-    # rationale)
-    fixed = prefer_fixed(df)
+    # it (small inputs take the compact HOF cosine instead, "unroll"
+    # scale gate)
+    fixed = scale_gate("unroll", df)
     acols = ["id", "v", "is_q", probes.alias("probes")]
     if fixed:
         acols.append(norm_fixed(F.col("v"), dim).alias("__n"))
@@ -637,21 +593,12 @@ def brute_force_neighbors_arrow(
     # the Arrow matmul inherits the scan's parallelism — a single-file
     # table runs the whole Q x N BLAS sweep in ONE Python worker (guide
     # §2.5 input skew / §4: the r11 spread_ids defect, VERDICT item 3).
-    # Size-gated exactly like brute_force_neighbors: below the threshold
-    # the exchange + task scheduling cost more than the single-task
-    # sweep. Result-identical at any partitioning: each partition emits
-    # its exact local top-k on rounded scores, the global rank merges.
+    # Size-gated like brute_force_neighbors, on the later BLAS crossover
+    # ("arrow_spread"). Result-identical at any partitioning: each
+    # partition emits its exact local top-k on rounded scores, the
+    # global rank merges.
     qrows = base.where(query_pred).collect()
-    # size gate FIRST: the stats read is a cheap driver-side call while
-    # .rdd.getNumPartitions() pays a physical-planning pass (see
-    # quantized_neighbors_arrow) — short-circuit keeps the small-input
-    # path free
-    sc = df.sparkSession.sparkContext
-    if (
-        _plan_size_bytes(df) >= _ARROW_SPREAD_MIN_BYTES
-        and base.rdd.getNumPartitions() < sc.defaultParallelism
-    ):
-        base = base.repartition(sc.defaultParallelism, "id")
+    base = spread_if_narrow(base, df, "arrow_spread", "id")
     qids = np.array([r["id"] for r in qrows])
     qmat = np.array([r["v"] for r in qrows], dtype=np.float64)
     qnorm = np.linalg.norm(qmat, axis=1)
@@ -1083,8 +1030,8 @@ def hard_negatives(
     Zero-norm vectors are excluded up front (cosine is undefined on
     them; under ANSI the division would raise once the band predicate
     forces cosine evaluation on every pair)."""
-    if dim is not None and prefer_fixed(df):
-        # fixed-dim path (at scale only — prefer_fixed): norm once per
+    if dim is not None and scale_gate("unroll", df):
+        # fixed-dim path (at scale only — "unroll" gate): norm once per
         # row (reused by the filter AND the pair stage), unrolled dot per
         # pair — bit-identical to the HOF cosine (functions.vectors
         # fixed-form contract)
@@ -1482,9 +1429,9 @@ def cosine_histogram(
     # three array walks (guide §2.3 "don't compute things you throw
     # away"; bit-identical — same expression on the same rows, see
     # functions.vectors fixed-form contract). The unrolled forms are
-    # scale-gated (prefer_fixed): small inputs build the compact HOF
+    # scale-gated ("unroll"): small inputs build the compact HOF
     # trees — identical values, ~1/50th the Expression nodes per task.
-    fixed = prefer_fixed(df)
+    fixed = scale_gate("unroll", df)
     nrm = (
         norm_fixed(F.col(vec_col), dim)
         if fixed

@@ -1,24 +1,40 @@
-"""The r11 scale gates: unrolled fixed-dim vector forms and hub
-checkpoints engage only past a size threshold (optimizer plan stats,
-env-tunable), and BOTH branches of every gated operator produce
-identical results.
+"""The scale gates (operators.common.scale_gate): unrolled fixed-dim
+vector forms, hub checkpoints and spreading exchanges engage only past a
+size threshold (the optimizer's size estimate against one entry of
+SCALE_GATE_MIN_BYTES, read at call time), and BOTH branches of every
+gated operator produce identical results. Tests force a branch by
+patching that table.
 
 Rationale (OPTIMIZATION_r11.md batch 10): the unrolled chains trade
 per-row interpreted cost for a large expression tree whose per-task
 deserialization and per-action planning dominate small inputs (measured
 2-3x bench regressions at sf0.1); hub localCheckpoints trade N lineage
 re-runs for an extra job + barrier that likewise loses below the
-threshold. The gates pick per frame; results cannot depend on the
-branch.
+threshold; a spreading exchange costs more than the single-task sweep
+it splits on a small input. The gates pick per frame; results cannot
+depend on the branch.
 """
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from bullet_storm_spark.functions import vectors as V
-from bullet_storm_spark.operators.common import hub_checkpoint
+from bullet_storm_spark.operators.common import (
+    SCALE_GATE_MIN_BYTES,
+    hub_checkpoint,
+    scale_gate,
+)
+
+# "off" must exceed Long.MaxValue (2^63-1): in-memory createDataFrame
+# frames report defaultSizeInBytes = Long.MaxValue, so a 1 << 62
+# threshold would still take the at-scale branch and a branch comparison
+# would be vacuous (both labels running the same code). The gate
+# comparison is Python-side, so unbounded ints work.
+OFF, ON = 1 << 64, 0
 
 
 @pytest.fixture()
@@ -34,37 +50,36 @@ def vec_df(spark):
     return spark.createDataFrame(rows, "id long, v array<double>"), dim
 
 
-def _force(monkeypatch, name, value):
-    monkeypatch.setenv(name, str(value))
+def _force(monkeypatch, value, gates=("unroll", "hub")):
+    """Set the named gates' thresholds for the rest of the test."""
+    for gate in gates:
+        monkeypatch.setitem(SCALE_GATE_MIN_BYTES, gate, value)
 
 
-def test_prefer_fixed_gates_on_size(spark, monkeypatch, vec_df):
-    # parquet-backed frame: footer stats say it is tiny -> HOF branch
+def test_unroll_gate_on_size(spark, monkeypatch, vec_df):
     pq = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    monkeypatch.delenv("SPARK_GRAFT_UNROLL_MIN_BYTES", raising=False)
-    assert V.prefer_fixed(pq) is False
-    # threshold 0 -> unrolled branch
-    _force(monkeypatch, "SPARK_GRAFT_UNROLL_MIN_BYTES", 0)
-    assert V.prefer_fixed(pq) is True
+    df, _ = vec_df
+    # parquet-backed frame: footer stats say it is tiny -> HOF branch
+    assert scale_gate("unroll", pq) is False
     # in-memory (LogicalRDD-backed) frame: stats().sizeInBytes() succeeds
     # and returns defaultSizeInBytes = Long.MaxValue -> assume big, the
     # production posture (it does NOT raise)
-    df, _ = vec_df
-    monkeypatch.delenv("SPARK_GRAFT_UNROLL_MIN_BYTES", raising=False)
-    assert V.prefer_fixed(df) is True
-    # ... which means a threshold must exceed Long.MaxValue to force the
-    # HOF branch on an in-memory frame (the _collect_both contract below)
-    _force(monkeypatch, "SPARK_GRAFT_UNROLL_MIN_BYTES", 1 << 64)
-    assert V.prefer_fixed(df) is False
+    assert scale_gate("unroll", df) is True
+    # threshold 0 -> unrolled branch
+    _force(monkeypatch, ON, ("unroll",))
+    assert scale_gate("unroll", pq) is True
+    # ... and a threshold above Long.MaxValue forces the HOF branch on an
+    # in-memory frame (the OFF contract above)
+    _force(monkeypatch, OFF, ("unroll",))
+    assert scale_gate("unroll", df) is False
 
 
 def test_hub_checkpoint_gates_on_source_size(spark, monkeypatch):
     pq = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     hub = pq.groupBy("vec_id").count()
-    monkeypatch.delenv("SPARK_GRAFT_HUB_MIN_BYTES", raising=False)
     out = hub_checkpoint(hub, pq)
     assert out is hub  # tiny parquet source: no checkpoint
-    _force(monkeypatch, "SPARK_GRAFT_HUB_MIN_BYTES", 0)
+    _force(monkeypatch, ON, ("hub",))
     out = hub_checkpoint(hub, pq)
     assert out is not hub  # checkpointed frame
     n = pq.count()
@@ -72,20 +87,15 @@ def test_hub_checkpoint_gates_on_source_size(spark, monkeypatch):
 
 
 def _collect_both(monkeypatch, build, df=None):
-    """Collect the same operator output under both gate branches.
-
-    The "hof" threshold must exceed Long.MaxValue (2^63-1): in-memory
-    createDataFrame frames report defaultSizeInBytes = Long.MaxValue, so
-    a 1 << 62 threshold would still take the unrolled branch and the
-    comparison would be vacuous (both labels running the same code). The
-    gate comparison is Python-side, so unbounded ints work. When ``df``
-    is passed, assert the two settings really take different branches."""
+    """Collect the same operator output with the "unroll" and "hub"
+    gates forced off ("hof", a threshold above Long.MaxValue — see OFF)
+    and on ("fixed"). When ``df`` is passed, assert the two settings
+    really take different branches."""
     rows = {}
-    for label, thresh in (("hof", 1 << 64), ("fixed", 0)):
-        _force(monkeypatch, "SPARK_GRAFT_UNROLL_MIN_BYTES", thresh)
-        _force(monkeypatch, "SPARK_GRAFT_HUB_MIN_BYTES", thresh)
+    for label, thresh in (("hof", OFF), ("fixed", ON)):
+        _force(monkeypatch, thresh)
         if df is not None:
-            assert V.prefer_fixed(df) is (label == "fixed")
+            assert scale_gate("unroll", df) is (label == "fixed")
         rows[label] = sorted(map(repr, (tuple(r) for r in build().collect())))
     return rows
 
@@ -240,9 +250,8 @@ def test_short_vector_fuzz_neardup_and_quantized(
 
     from pyspark.errors.exceptions.captured import PythonException
 
-    for thresh in (1 << 64, 0):
-        _force(monkeypatch, "SPARK_GRAFT_UNROLL_MIN_BYTES", thresh)
-        _force(monkeypatch, "SPARK_GRAFT_HUB_MIN_BYTES", thresh)
+    for thresh in (OFF, ON):
+        _force(monkeypatch, thresh)
         with _pytest.raises(PythonException, match="dimensions|match"):
             quantized_neardup_pairs_lsh(
                 df, "id", "v", threshold=0.3, nbits=3, ntables=2, dim=dim
@@ -293,11 +302,11 @@ def test_bm25_and_series_hub_branches_identical(spark, monkeypatch):
         "doc_id long, text string",
     )
     rows = {}
-    # 1 << 64 > Long.MaxValue: an in-memory frame's defaultSizeInBytes
-    # stat is Long.MaxValue, so a 1 << 62 "off" threshold would still
+    # OFF > Long.MaxValue: an in-memory frame's defaultSizeInBytes stat
+    # is Long.MaxValue, so a 1 << 62 "off" threshold would still
     # checkpoint and the branch comparison would be vacuous
-    for label, thresh in (("off", 1 << 64), ("on", 0)):
-        _force(monkeypatch, "SPARK_GRAFT_HUB_MIN_BYTES", thresh)
+    for label, thresh in (("off", OFF), ("on", ON)):
+        _force(monkeypatch, thresh, ("hub",))
         # prove the two settings really take different branches on this
         # in-memory frame (identity: gate-off returns the frame itself)
         probe = docs.limit(1)
@@ -309,21 +318,91 @@ def test_bm25_and_series_hub_branches_identical(spark, monkeypatch):
     assert len(rows["off"]) > 0
 
 
-def test_arrow_spread_threshold_is_separate_and_higher(monkeypatch):
+def test_arrow_spread_threshold_is_separate_and_higher():
     # r12: the Arrow/BLAS matmul paths spread far later than the SQL
     # pair-compute paths (numpy does ~100x the work per second, so the
     # spreading exchange overtakes its parallelism gain only on much
     # larger inputs — measured at the sf10 weak-scaling point). Pin the
-    # split: a separate env knob, defaulting well above the SQL spread.
-    import importlib
+    # split: a separate gate, well above the SQL spread.
+    assert SCALE_GATE_MIN_BYTES["arrow_spread"] > SCALE_GATE_MIN_BYTES["spread"]
 
-    import bullet_storm_spark.operators.similarity as sim
 
-    assert sim._ARROW_SPREAD_MIN_BYTES > sim._SPREAD_MIN_BYTES
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SPREAD_MIN_BYTES", "123")
-    importlib.reload(sim)
-    try:
-        assert sim._ARROW_SPREAD_MIN_BYTES == 123
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_ARROW_SPREAD_MIN_BYTES")
-        importlib.reload(sim)
+def _spread_both(monkeypatch, gate, build):
+    """Collect ``build()`` with ``gate`` forced off and on. Only the "on"
+    plan may hold a spreading (REPARTITION_BY_NUM) exchange, and the
+    rows must be identical."""
+    spread, rows = {}, {}
+    for label, thresh in (("off", OFF), ("on", ON)):
+        _force(monkeypatch, thresh, (gate,))
+        out = build()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        spread[label] = "REPARTITION_BY_NUM" in plan
+        rows[label] = sorted(map(repr, (tuple(r) for r in out.collect())))
+    assert spread == {"off": False, "on": True}
+    assert rows["off"] == rows["on"]
+    assert len(rows["on"]) > 0
+
+
+@pytest.fixture()
+def narrow_vec_df(spark, vec_df):
+    """vec_df scanned by fewer tasks than the session has cores, the
+    input shape the spread gates exist for."""
+    df, dim = vec_df
+    narrow = df.coalesce(1)
+    assert narrow.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    return narrow, dim
+
+
+@pytest.mark.parametrize("with_dim", [False, True])
+def test_brute_force_spread_branches_identical(
+    monkeypatch, narrow_vec_df, with_dim
+):
+    from bullet_storm_spark.operators.similarity import brute_force_neighbors
+
+    df, dim = narrow_vec_df
+    _spread_both(
+        monkeypatch,
+        "spread",
+        lambda: brute_force_neighbors(
+            df, "id", "v", F.col("id") < 5, k=3, dim=dim if with_dim else None
+        ),
+    )
+
+
+def test_brute_force_arrow_spread_branches_identical(monkeypatch, narrow_vec_df):
+    from bullet_storm_spark.operators.similarity import (
+        brute_force_neighbors_arrow,
+    )
+
+    df, _ = narrow_vec_df
+    _spread_both(
+        monkeypatch,
+        "arrow_spread",
+        lambda: brute_force_neighbors_arrow(df, "id", "v", F.col("id") < 5, k=3),
+    )
+
+
+def test_quantized_arrow_spread_branches_identical(monkeypatch, narrow_vec_df):
+    from bullet_storm_spark.operators.quantize import quantized_neighbors_arrow
+
+    df, _ = narrow_vec_df
+    _spread_both(
+        monkeypatch,
+        "arrow_spread",
+        lambda: quantized_neighbors_arrow(df, "id", "v", F.col("id") < 5, k=3),
+    )
+
+
+def test_one_reader_of_the_size_estimate():
+    # every size-gated branch goes through operators.common.scale_gate:
+    # one file reads the optimizer estimate, and no threshold is read
+    # from the environment (tests patch SCALE_GATE_MIN_BYTES instead)
+    src = pathlib.Path(__file__).resolve().parents[1] / "bullet_storm_spark"
+    readers, env_knobs = [], []
+    for path in sorted(src.rglob("*.py")):
+        text = path.read_text()
+        if re.search(r"optimizedPlan\(\)\s*\.\s*stats\(\)", text):
+            readers.append(path.relative_to(src).as_posix())
+        env_knobs += re.findall(r"""["'][A-Z0-9_]*_MIN_BYTES["']""", text)
+    assert readers == ["operators/common.py"]
+    assert env_knobs == []
