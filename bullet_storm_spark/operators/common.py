@@ -86,8 +86,9 @@ def post_sql(inner: str, post: Sequence[PostAggregation], limit: int | None) -> 
 # one lineage run and a checkpoint: each pair costs differently at
 # different sizes, so an operator with such a choice asks scale_gate()
 # which branch this frame takes. Both branches return identical rows
-# (tests/test_scale_gates.py). Thresholds are bytes of the optimizer's
-# size estimate, compared with >= and read at call time.
+# (tests/test_scale_gates.py; batch_shuffle in tests/test_multiquery.py).
+# Thresholds are bytes of the optimizer's size estimate, compared with >=
+# and read at call time.
 SCALE_GATE_MIN_BYTES = {
     # Unrolled fixed-dim vector chains (functions.vectors *_fixed) vs the
     # compact HOF trees. The unrolled chains trade PER-ROW cost (compiled
@@ -127,6 +128,18 @@ SCALE_GATE_MIN_BYTES = {
     # splits bound a cluster scan task near 128 MB (~0.3 s of BLAS), so
     # the exchange stays a net loss until per-row work grows.
     "arrow_spread": 1 << 30,
+    # A streaming batch's scan partitions kept, shuffled and (read by 2+
+    # jobs) persisted vs the batch coalesced to one partition (engine
+    # process_batch). One partition satisfies every aggregation's
+    # distribution, so each job is one task with no exchange and nothing
+    # is cached: 3 jobs per steady_fleet batch instead of 9. Measured
+    # (fleet_scale.py batch_shuffle, 4-file batches, local[4], SCALING.md):
+    # the 3-job steady_fleet fleet runs faster on one partition at every
+    # size up to 47 MB (1496 vs 1983 ms there), but the 1-job wide_groups
+    # fleet, which then uses one core, wins only up to 4.2 MB (167 vs
+    # 182 ms) and loses from 8 MB (222 vs 174). 4 MiB is also Spark's
+    # default openCostInBytes, below which a single file is one split.
+    "batch_shuffle": 4 << 20,
 }
 
 # Long.MaxValue: the estimate an in-memory (LogicalRDD) frame reports

@@ -30,7 +30,10 @@ multiquery.RAW_LIMIT_JOBS_MAX members into one concurrent limit job per
 member and larger RAW fleets into one mapInPandas pass per 64 members, and
 QUANTILE fleets into one KLL-partial pass per 16; the query-predicate
 partitioner (streaming/partitioner.py) prunes provably-non-matching
-queries before any job runs. The batch is persisted when more than one job
+queries before any job runs. A batch below the "batch_shuffle" scale gate
+is coalesced to one partition, so each job is one task and every
+aggregation plans without an exchange; a larger batch (or one whose size
+is unknown) keeps its partitions and is persisted when more than one job
 reads it.
 """
 
@@ -50,6 +53,7 @@ from bullet_storm_spark.clip import (
     SIGNAL_KEY,
     WINDOW_NUMBER_KEY,
 )
+from bullet_storm_spark.operators.common import scale_gate
 from bullet_storm_spark.plans.query import (
     Query,
     SlidingRecordWindow,
@@ -98,9 +102,10 @@ class StreamingEngine:
         self.metrics = EngineMetrics()
         self._listener = None  # Spark listener bridge once attached
         # concurrent job-submission width: each chunk partial is a tiny
-        # job (AQE coalesces its shuffle), so the binding cost is
-        # submission round-trips, not cores — measured on local[32]:
-        # 100-query batch 4.9s at width 8, 3.0s at width 24
+        # job (one task on a small batch; AQE coalesces a large batch's
+        # shuffle), so the binding cost is submission round-trips, not
+        # cores — measured on local[32]: 100-query batch 4.9s at width 8,
+        # 3.0s at width 24
         try:
             cores = spark.sparkContext.defaultParallelism
         except Exception:  # pragma: no cover - no context yet
@@ -313,6 +318,14 @@ class StreamingEngine:
                     self._finish(rq, Signal.COMPLETE)
             if not active:
                 return
+        # one partition-shape decision per batch, before any job reads it:
+        # a batch below the "batch_shuffle" gate runs every job as ONE task
+        # (one partition satisfies every aggregation's distribution, so no
+        # exchange) and is never persisted; a larger or unsized batch keeps
+        # its partitions, its shuffles and the multi-reader persist below
+        small = not scale_gate("batch_shuffle", batch_df)
+        if small:
+            batch_df = batch_df.coalesce(1)
         # query-predicate partitioner (QueryManager.categorize analogue,
         # SURVEY.md §4 row 1): one stats job over the batch prunes queries
         # whose equality filter provably cannot match. Pruned queries skip
@@ -334,14 +347,14 @@ class StreamingEngine:
         # the Spark jobs that will read the batch: one per chunk (the
         # fault-isolated rerun below plans at least one per query)
         self.batch_jobs = len(scan) if chunks is None else len(chunks)
-        # persist the batch only if the caller hasn't already: a pre-
-        # normalized, pre-persisted batch (bench.py, replayed batches)
-        # passes straight through, while a fresh foreachBatch frame is
-        # persisted for the multi-job fan-out and ALWAYS unpersisted after
-        we_persisted = False
-        if self.batch_jobs > 1 and not getattr(batch_df, "is_cached", False):
+        # persist a large batch that several jobs read, unless the caller
+        # already has (bench.py, replayed batches); a fresh foreachBatch
+        # frame persisted here is ALWAYS unpersisted after. A small batch is
+        # one task per job, cheaper to re-scan than to cache.
+        cached = getattr(batch_df, "is_cached", False)
+        we_persisted = not small and self.batch_jobs > 1 and not cached
+        if we_persisted:
             batch_df.persist()
-            we_persisted = True
         try:
             from bullet_storm_spark.streaming.multiquery import shared_partials
 

@@ -16,13 +16,21 @@ Measures, at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]:
    FilterBolt.java:148-155);
 4. the RAW crossover: fleets of 1-48 RAW members, each bound both ways on a
    fresh 2k-row parquet slice through the ``multiquery`` functions — one
-   limit job per member (the batch persisted, as the engine does when more
-   than one job reads it; also unpersisted) against one shared mapInPandas
-   pass, for fresh fleets and for plan-cached ones — which sets
-   ``multiquery.RAW_LIMIT_JOBS_MAX``.
+   limit job per member (the slice persisted when more than one job reads
+   it, as the engine does for a batch at or above its "batch_shuffle"
+   gate; also unpersisted) against one shared mapInPandas pass, for fresh
+   fleets and for plan-cached ones — which sets
+   ``multiquery.RAW_LIMIT_JOBS_MAX``;
+5. the batch_shuffle crossover: the perfbench steady_fleet (3 jobs a
+   batch) and wide_groups (1 job) fleets on fresh 4-file parquet batches
+   of ~0.3-45 MiB, each batch run through ``StreamingEngine.process_batch``
+   with the "batch_shuffle" gate forced each way — coalesced to one
+   partition, or partitioned, shuffled and (2+ jobs) persisted — which
+   sets ``SCALE_GATE_MIN_BYTES["batch_shuffle"]``.
 
-``python scripts/fleet_scale.py raw_crossover`` runs series 4 alone.
-Prints one JSON line; SCALING.md records the series.
+``python scripts/fleet_scale.py raw_crossover`` runs series 4 alone and
+``python scripts/fleet_scale.py batch_shuffle`` series 5. Prints one JSON
+line; SCALING.md records the series.
 """
 
 from __future__ import annotations
@@ -120,8 +128,11 @@ def raw_crossover(spark, reps: int = 7) -> dict:
     """Median ms per batch of a RAW fleet of each size in RAW_FLEETS bound
     and collected as one limit job per member or as one shared pass, each
     rep on a fresh 2k-row slice, the sides interleaved. A side persists the
-    slice when more than one job reads it, as the engine does, except
-    ``limit_jobs_unpersisted``."""
+    slice when more than one job reads it, as the engine does for a batch
+    at or above the "batch_shuffle" gate, except
+    ``limit_jobs_unpersisted``. The sides bind the slice as read, so this
+    prices the partitioned branch, not the coalesced one a slice this
+    small takes in the engine."""
     from perfbench.workloads import write_slices
 
     frozen = lambda: 1.0  # noqa: E731
@@ -185,11 +196,104 @@ def raw_crossover(spark, reps: int = 7) -> dict:
     return out
 
 
+# batch sizes of the batch_shuffle series, in perfbench events rows
+# (15-24 bytes a row on disk): ~0.3 to ~45 MiB, each written as
+# SHUFFLE_FILES files so that it scans as several partitions
+SHUFFLE_ROWS = (
+    12_500, 25_000, 50_000, 100_000, 200_000, 400_000, 800_000, 1_600_000, 3_200_000
+)
+SHUFFLE_FILES = 4
+# the gate forced each way: above any estimate, below every estimate
+SHUFFLE_SIDES = {"one_partition": 1 << 64, "partitioned": 0}
+
+
+def batch_shuffle(spark, reps: int = 5) -> dict:
+    """Median ms per batch on batches of each size in SHUFFLE_ROWS, with
+    the "batch_shuffle" gate forced each way, for two perfbench fleets:
+    steady_fleet (12 long-lived queries over every aggregation family, 3
+    jobs a batch, so the partitioned side persists) and wide_groups (4
+    GROUP BYs on one key set, 1 job, no persist). One engine per fleet and
+    side; each rep reads the batch as a fresh frame, the sides
+    interleaved."""
+    import numpy as np
+
+    from bullet_storm_spark.config import EngineConfig
+    from bullet_storm_spark.operators.common import SCALE_GATE_MIN_BYTES
+    from perfbench.run import SCHEMA
+    from perfbench.workloads import TICK_MS, steady_fleet, wide_fleet, write_slices
+
+    frozen = lambda: 1.0  # noqa: E731
+    rng = np.random.default_rng([7, 2])
+    fleets = {"steady_fleet": steady_fleet(rng, 2), "wide_groups": wide_fleet(rng, 4)}
+    engines = {}
+    for name, specs in fleets.items():
+        for side in SHUFFLE_SIDES:
+            # perfbench's engine tick, which admits its 2-batch windows
+            engine = StreamingEngine(
+                spark, clock=frozen, config=EngineConfig(tick_interval_ms=TICK_MS)
+            )
+            for spec in specs:
+                engine.submit(spec.qid, parse(spec.bql))
+            engines[(name, side)] = engine
+
+    def run(name: str, side: str, path: str) -> float:
+        SCALE_GATE_MIN_BYTES["batch_shuffle"] = SHUFFLE_SIDES[side]
+        frame = spark.read.schema(SCHEMA).parquet(path)
+        t0 = time.perf_counter()
+        engines[(name, side)].process_batch(frame)
+        return time.perf_counter() - t0
+
+    default = SCALE_GATE_MIN_BYTES["batch_shuffle"]
+    out: dict = {"files": SHUFFLE_FILES, "reps": reps, "batches": {}}
+    times: dict = {key: {rows: [] for rows in SHUFFLE_ROWS} for key in engines}
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            paths = {}
+            for rows in SHUFFLE_ROWS:
+                paths[rows] = os.path.join(tmp, str(rows))
+                write_slices(paths[rows], rows, rows // SHUFFLE_FILES, SHUFFLE_FILES)
+            for key in engines:  # warm the JVM and the plan caches
+                run(*key, paths[SHUFFLE_ROWS[0]])
+            keys = list(engines)
+            for rep in range(reps):
+                for rows in SHUFFLE_ROWS:
+                    for key in keys if (rep + rows) % 2 else keys[::-1]:
+                        times[key][rows].append(run(*key, paths[rows]))
+            for rows, path in paths.items():
+                rec = {
+                    "bytes": sum(
+                        os.path.getsize(os.path.join(path, f))
+                        for f in os.listdir(path)
+                    ),
+                    "partitions": spark.read.parquet(path).rdd.getNumPartitions(),
+                }
+                for name, side in keys:
+                    rec[f"{name}_{side}_ms"] = round(
+                        1000 * statistics.median(times[(name, side)][rows]), 1
+                    )
+                out["batches"][str(rows)] = rec
+                print(f"# batch_shuffle {rows} rows: {rec}", file=sys.stderr)
+    finally:
+        SCALE_GATE_MIN_BYTES["batch_shuffle"] = default
+    for name in fleets:
+        engine = engines[(name, "partitioned")]
+        out[f"{name}_live_queries"] = len(engine.registry.active())
+        out[f"{name}_jobs_per_batch"] = engine.batch_jobs
+        out[f"{name}_one_partition_ahead_at_bytes"] = [
+            rec["bytes"]
+            for rec in out["batches"].values()
+            if rec[f"{name}_one_partition_ms"] < rec[f"{name}_partitioned_ms"]
+        ]
+    out["batch_shuffle_min_bytes"] = default
+    return out
+
+
 def main() -> None:
     spark = get_spark(app_name="bullet-storm-spark-fleet-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    if sys.argv[1:] == ["raw_crossover"]:
-        out = {"raw_crossover": raw_crossover(spark)}
+    series = {"raw_crossover": raw_crossover, "batch_shuffle": batch_shuffle}
+    if len(sys.argv) == 2 and sys.argv[1] in series:
+        out = {sys.argv[1]: series[sys.argv[1]](spark)}
         print(json.dumps(out))
         spark.stop()
         return
@@ -281,6 +385,7 @@ def main() -> None:
 
     batch.unpersist()
     out["raw_crossover"] = raw_crossover(spark)
+    out["batch_shuffle"] = batch_shuffle(spark)
     print(json.dumps(out))
     spark.stop()
 

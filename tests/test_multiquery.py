@@ -128,8 +128,10 @@ def _mixed_queries():
     }
 
 
-@pytest.fixture()
-def batches(spark):
+BATCH_SCHEMA = "k string, s string, v double, n int"
+
+
+def _batch_rows():
     # v is NULL on every 9th row of batch 0 (PMF/CDF bin nothing but still
     # consume the record); batch 1 mixes the literal "null" into s
     rows1 = [
@@ -142,11 +144,39 @@ def batches(spark):
         for i in range(80)
     ]
     rows2 = [("c", ["x", "null"][i % 2], float(i) + 0.5, i) for i in range(40)]
-    schema = "k string, s string, v double, n int"
-    return (
-        spark.createDataFrame(rows1, schema),
-        spark.createDataFrame(rows2, schema),
+    return rows1, rows2
+
+
+@pytest.fixture()
+def batches(spark):
+    return tuple(spark.createDataFrame(rows, BATCH_SCHEMA) for rows in _batch_rows())
+
+
+@pytest.fixture()
+def parquet_batches(spark, tmp_path):
+    """The ``batches`` rows as parquet directories of 3 files each: a
+    parquet frame's size estimate is its bytes on disk, which the
+    "batch_shuffle" gate can read (an in-memory frame's is unknown, so it
+    is always big), and 3 files scan as 3 partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema(
+        [("k", pa.string()), ("s", pa.string()), ("v", pa.float64()), ("n", pa.int32())]
     )
+    frames = []
+    for b, rows in enumerate(_batch_rows()):
+        path = tmp_path / f"batch{b}"
+        path.mkdir()
+        for part in range(3):
+            table = pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows[part::3]], schema
+            )
+            pq.write_table(table, path / f"part-{part}.parquet")
+        frame = spark.read.schema(BATCH_SCHEMA).parquet(str(path))
+        assert frame.rdd.getNumPartitions() == 3
+        frames.append(frame)
+    return tuple(frames)
 
 
 def _outcomes(engine):
@@ -800,6 +830,96 @@ def test_batch_jobs_and_single_reader_skips_persist(
     engine.process_batch(batches[1])
     assert engine.stats()["batch_jobs"] == 2
     assert len(calls) == 1
+
+
+# the "batch_shuffle" gate forced each way: 1 << 64 is above any estimate
+# (small: one partition), 0 is below every estimate (big: partitions kept)
+SMALL, BIG = 1 << 64, 0
+
+
+def _force_batch_shuffle(monkeypatch, threshold):
+    from bullet_storm_spark.operators.common import SCALE_GATE_MIN_BYTES
+
+    monkeypatch.setitem(SCALE_GATE_MIN_BYTES, "batch_shuffle", threshold)
+
+
+def _record_binds(monkeypatch, frame_cls):
+    """Every aggregation job's physical plan as it is collected, and one
+    entry per persist call, from here on."""
+    plans, persisted = [], []
+    real_to_arrow, real_persist = frame_cls.toArrow, frame_cls.persist
+
+    def to_arrow(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_to_arrow(self)
+
+    monkeypatch.setattr(frame_cls, "toArrow", to_arrow)
+    monkeypatch.setattr(
+        frame_cls,
+        "persist",
+        lambda self, *a, **k: persisted.append(1) or real_persist(self, *a, **k),
+    )
+    return plans, persisted
+
+
+def test_batch_shuffle_gate_is_result_neutral(spark, parquet_batches, monkeypatch):
+    # every family, RAW as limit jobs and as a pass, gives the same
+    # results and records_consumed on both branches, alone and in a fleet
+    from bullet_storm_spark.streaming.multiquery import RAW_LIMIT_JOBS_MAX
+
+    mixed = _mixed_queries()  # holds one RAW query
+    limit_fleet = {**mixed, **_raw_fleet(RAW_LIMIT_JOBS_MAX - 1, size=90, off=20)}
+    pass_fleet = {**mixed, **_raw_fleet(RAW_LIMIT_JOBS_MAX, size=90, off=20)}
+    alone = {}
+    for branch, threshold in (("small", SMALL), ("big", BIG)):
+        _force_batch_shuffle(monkeypatch, threshold)
+        limit_engine = run_fleet(spark, limit_fleet, parquet_batches)
+        pass_engine = run_fleet(spark, pass_fleet, parquet_batches)
+        assert [len(cp.rqs) for cp in limit_engine._raw_chunk_cache] == (
+            [1] * RAW_LIMIT_JOBS_MAX
+        )
+        assert [len(cp.rqs) for cp in pass_engine._raw_chunk_cache] == [
+            RAW_LIMIT_JOBS_MAX + 1
+        ]
+        alone[branch] = _alone_outcomes(spark, pass_fleet, parquet_batches)
+        assert _outcomes(pass_engine) == alone[branch], branch
+        assert _outcomes(limit_engine) == {
+            qid: alone[branch][qid] for qid in limit_fleet
+        }, branch
+    assert alone["small"] == alone["big"]
+
+
+@pytest.mark.parametrize("branch", ["small", "big"])
+def test_batch_shuffle_gate_decides_exchange_and_persist(
+    spark, parquet_batches, monkeypatch, branch
+):
+    # a small batch is one partition: no aggregation plan holds an
+    # exchange and nothing is persisted; a big batch keeps the exchange
+    # and is persisted when two or more jobs read it
+    _force_batch_shuffle(monkeypatch, SMALL if branch == "small" else BIG)
+    plans, persisted = _record_binds(monkeypatch, type(parquet_batches[0]))
+    engine = run_fleet(spark, _mixed_queries(), parquet_batches)
+    assert engine.stats()["batch_jobs"] > 1
+    assert len(plans) > 2
+    if branch == "small":
+        assert not any("Exchange" in p for p in plans), plans
+        assert persisted == []
+    else:
+        assert all("Exchange" in p for p in plans), plans
+        assert len(persisted) == len(parquet_batches)
+
+
+def test_batch_shuffle_gate_defaults(spark, batches, parquet_batches, monkeypatch):
+    # at the default threshold a small parquet batch is small, while an
+    # in-memory frame (estimate Long.MaxValue, like a Kafka batch's) is big
+    from bullet_storm_spark.operators.common import scale_gate
+
+    assert scale_gate("batch_shuffle", parquet_batches[0]) is False
+    assert scale_gate("batch_shuffle", batches[0]) is True
+    plans, persisted = _record_binds(monkeypatch, type(batches[0]))
+    run_fleet(spark, _mixed_queries(), batches)
+    assert plans and all("Exchange" in p for p in plans), plans
+    assert len(persisted) == len(batches)
 
 
 def test_topk_negative_zero_reports_under_zero(spark):
